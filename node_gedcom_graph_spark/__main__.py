@@ -23,8 +23,31 @@ headers (fixes the first-record-wins quirk, SURVEY §7.3), and
 from __future__ import annotations
 
 import argparse
+import shutil
 import sys
 import tempfile
+
+
+def _audit_rows(graph) -> dict[str, list[tuple]]:
+    """The three audit sets, collected in one job; each value is the
+    list of the set's rows as tuples."""
+    from pyspark.sql import functions as F
+
+    seq, text = F.lit(None).cast("long"), F.lit(None).cast("string")
+    rows = (
+        graph.unused_tags.select(
+            F.lit(0).alias("k"), seq.alias("seq"), F.col("tag").alias("a"),
+            text.alias("b"),
+        )
+        .union(graph.missing_temple_codes.select(F.lit(1), seq, "code", text))
+        .union(graph.skipped_records.select(F.lit(2), "record_seq", "tag", "xref"))
+        .collect()
+    )
+    return {
+        "unused tags": [(r.a,) for r in rows if r.k == 0],
+        "missing temple codes": [(r.a,) for r in rows if r.k == 1],
+        "skipped records": [(r.seq, r.a, r.b) for r in rows if r.k == 2],
+    }
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -55,8 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     from node_gedcom_graph_spark.publish.neo4j_csv import (
         atomic_publish,
         build_import_args,
-        export_neo4j_csvs,
-        observed_counts,
+        export_with_counts,
         run_import_publish,
     )
     from node_gedcom_graph_spark.session import get_spark
@@ -95,41 +117,41 @@ def main(argv: list[str] | None = None) -> int:
         staging = args.tmpdir or tempfile.mkdtemp(
             prefix="ged2neo-csvs-", dir=dest_parent
         )
-        outputs = export_neo4j_csvs(graph, staging)
-        counts = observed_counts(graph)
+        try:
+            outputs, counts = export_with_counts(graph, staging)
 
-        for name, rows in sorted(counts.items()):
-            print(f"{name}: {rows}", file=sys.stderr)
-        audits = {
-            "unused tags": graph.unused_tags,
-            "missing temple codes": graph.missing_temple_codes,
-            "skipped records": graph.skipped_records,
-        }
-        for label, df in audits.items():
-            vals = [tuple(r) for r in df.collect()]
-            if vals:
-                print(f"{label}: {vals}", file=sys.stderr)
+            for name, rows in sorted(counts.items()):
+                print(f"{name}: {rows}", file=sys.stderr)
+            for label, vals in _audit_rows(graph).items():
+                if vals:
+                    print(f"{label}: {vals}", file=sys.stderr)
 
-        if args.run_import and not args.dry_run:
-            backup = run_import_publish(outputs, args.dest, bindir=args.bindir)
-            print(
-                f"imported + published -> {args.dest}"
-                + (f" (backup: {backup})" if backup else ""),
-                file=sys.stderr,
-            )
-            graph.unpersist()
-            return 0
-        if args.dry_run:
-            final_outputs = outputs
-        else:
-            backup = atomic_publish(staging, args.dest)
-            print(f"published {staging} -> {args.dest}"
-                  + (f" (backup: {backup})" if backup else ""), file=sys.stderr)
-            # The CSVs now live under dest — the argv must point there.
-            # (Group name == directory basename by construction in
-            # export_neo4j_csvs; joining avoids trailing-slash breakage
-            # a prefix-strip rewrite would hit.)
-            final_outputs = {g: os.path.join(args.dest, g) for g in outputs}
+            if args.run_import and not args.dry_run:
+                backup = run_import_publish(outputs, args.dest, bindir=args.bindir)
+                print(
+                    f"imported + published -> {args.dest}"
+                    + (f" (backup: {backup})" if backup else ""),
+                    file=sys.stderr,
+                )
+                graph.unpersist()
+                return 0
+            if args.dry_run:
+                final_outputs = outputs
+            else:
+                backup = atomic_publish(staging, args.dest)
+                print(f"published {staging} -> {args.dest}"
+                      + (f" (backup: {backup})" if backup else ""), file=sys.stderr)
+                # The CSVs now live under dest — the argv must point there.
+                final_outputs = {
+                    g: os.path.join(args.dest, os.path.relpath(p, staging))
+                    for g, p in outputs.items()
+                }
+        except BaseException:
+            # A staging dir this run created holds nothing worth keeping
+            # once the export or the publish failed.
+            if not args.tmpdir:
+                shutil.rmtree(staging, ignore_errors=True)
+            raise
         print(" ".join([f"{args.bindir}/neo4j-admin", "database", "import", "full"]
                        + build_import_args(final_outputs,
                                            into=args.dest if not args.dry_run else staging)))

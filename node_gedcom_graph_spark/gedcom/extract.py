@@ -82,6 +82,12 @@ class GedcomGraph:
 _MAP_EXPR_CACHE: dict[int, Column] = {}
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal, for building one ``F.expr``
+    instead of many ``F.lit`` py4j round trips."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _lookup_map(d: dict[str, str]) -> Column:
     """Literal map expression for a static lookup dict.
 
@@ -96,11 +102,10 @@ def _lookup_map(d: dict[str, str]) -> Column:
     if cached is not None:
         return cached
 
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     col = F.expr(
-        "map(" + ", ".join(f"{q(k)}, {q(v)}" for k, v in d.items()) + ")"
+        "map("
+        + ", ".join(f"{sql_string(k)}, {sql_string(v)}" for k, v in d.items())
+        + ")"
     )
     _MAP_EXPR_CACHE[id(d)] = col
     return col

@@ -2,11 +2,15 @@
 
 Re-expresses the reference's sink + publish machinery:
 - per-(family, tag) CSV fan-out (csv_writer.js:85-113 / SURVEY op 18)
-  -> one header'd CSV dataset per nodes-<TAG> / relationships-<TAG>,
-  with the Neo4j bulk header columns ('Gedcom Id:ID', ':LABEL',
-  ':START_ID', ':END_ID', ':TYPE' — csv_writer.js:126,140-144,183).
-  Spark writes headers from the schema, fixing the reference's
+  -> one CSV file per nodes-<TAG> / relationships-<TAG> group, its
+  Neo4j bulk header ('Gedcom Id:ID', ':LABEL', ':START_ID', ':END_ID',
+  ':TYPE' — csv_writer.js:126,140-144,183) on the first line. Headers
+  are the union of each group's keys, fixing the reference's
   first-record-wins header quirk (documented divergence, SURVEY §7.3).
+- RFC 4180 quoting, as the reference's fast-csv writes and neo4j-admin
+  reads by default: a field is quoted only when it holds '"', ',', CR
+  or LF, embedded quotes are doubled, NULL is an empty field. Header
+  fields follow the same rule (a promoted EVEN TYPE is part of a key).
 - neo4j-import argv construction (index.js:80-84, neo4j.js:79).
 - atomic publish: stage -> swap live to backup -> staging to live,
   rollback on failure (neo4j.js:20-51,84-95 / ops 21-23).
@@ -15,58 +19,206 @@ Re-expresses the reference's sink + publish machinery:
   swap/restore driven by real exit codes — the reference's
   import->stop->swap->start state machine (neo4j.js:84-109 / op 20).
 
-Scale: each per-tag dataset is written partitioned (many part files) —
-that IS the scalable layout; neo4j-admin import accepts multiple files
-per group. No coalesce(1) anywhere.
+Cost: like the reference's single pass over the records, every group
+comes from ONE partitioned write, after one small job that collects
+each group's column list. The observed row counts ride that write.
+Scale: a group is one file (neo4j-admin reads a group's files as one
+logical file with the header on the first line only), so each group is
+written by one task; groups are written in parallel.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+import tempfile
 import uuid
 
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from node_gedcom_graph_spark.gedcom.extract import GedcomGraph
+from node_gedcom_graph_spark.gedcom.extract import GedcomGraph, sql_string
+
+ID_COLUMN = "Gedcom Id:ID"
+PART_FILE = "part-00000.csv"
+
+
+def csv_field(s: str | None) -> str:
+    """One RFC 4180 field; ``_csv_field_expr`` is the column form."""
+    if s is None:
+        return ""
+    if any(c in s for c in '",\r\n'):
+        return '"' + s.replace('"', '""') + '"'
+    return s
+
+
+def _csv_field_expr(c: Column) -> Column:
+    return (
+        F.when(c.isNull(), F.lit(""))
+        .when(
+            c.rlike('[",\\r\\n]'),
+            F.concat(F.lit('"'), F.regexp_replace(c, '"', '""'), F.lit('"')),
+        )
+        .otherwise(c)
+    )
+
+
+def _count_aggs() -> list[Column]:
+    """Row counts over a frame whose node rows carry ``_props`` (property
+    rows they stand for) and ``record_id``, and whose edge rows carry
+    ``_edge``."""
+    return [
+        F.coalesce(F.sum("_props"), F.lit(0)).alias("n_property_rows"),
+        F.approx_count_distinct("record_id").alias("n_records_approx"),
+        F.count("_edge").alias("n_edges"),
+    ]
 
 
 def export_neo4j_csvs(graph: GedcomGraph, out_dir: str) -> dict[str, str]:
-    """Write nodes-<TAG>/ and relationships-<TAG>/ CSV datasets under
-    ``out_dir``; returns {group_name: path}. Deterministic layout, one
-    directory per (family, tag) — the reference's fan-out, lifted to
-    partitioned datasets."""
+    """Write ``out_dir``/<group>/part-00000.csv for every nodes-<TAG> and
+    relationships-<TAG> group; returns {group_name: csv_file_path}."""
+    return export_with_counts(graph, out_dir)[0]
+
+
+def export_with_counts(
+    graph: GedcomGraph, out_dir: str
+) -> tuple[dict[str, str], dict[str, int]]:
+    """``export_neo4j_csvs`` plus the ``observed_counts`` numbers, taken
+    by ``df.observe`` on the write itself. A group directory left from
+    an earlier export into ``out_dir`` is replaced."""
+    nodes, edges = graph.nodes_long, graph.edges
+    mine = [
+        df for df in (nodes, edges)
+        if not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+    ]
+    for df in mine:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _export(nodes, edges, out_dir)
+    finally:
+        for df in mine:
+            df.unpersist()
+
+
+def _export(
+    nodes: DataFrame, edges: DataFrame, out_dir: str
+) -> tuple[dict[str, str], dict[str, int]]:
+    spark = nodes.sparkSession
     os.makedirs(out_dir, exist_ok=True)
-    outputs: dict[str, str] = {}
 
-    root_tags = [r[0] for r in graph.nodes_long.select("root_tag").distinct().collect()]
-    for tag in sorted(root_tags):
-        wide = graph.nodes_wide(tag)
-        # 'Gedcom Id:ID' is already a flat key in the pivot (extract.py
-        # id_props); order it first like the reference's header.
-        prop_cols = [
-            c for c in wide.columns if c not in ("record_seq", "record_id", "label")
-        ]
-        prop_cols.sort(key=lambda c: (c != "Gedcom Id:ID", c))
-        ordered = wide.select(
-            *[F.col(f"`{c}`") for c in prop_cols],
-            F.col("label").alias(":LABEL"),
+    # Every group's columns in one job; an edge group's key is NULL.
+    node_keys: dict[str, list[str]] = {}
+    edge_tags: set[str] = set()
+    for tag, key in (
+        nodes.select(F.col("root_tag").alias("tag"), "flat_key")
+        .unionByName(
+            edges.select(
+                F.col("edge_tag").alias("tag"),
+                F.lit(None).cast("string").alias("flat_key"),
+            )
         )
-        path = os.path.join(out_dir, f"nodes-{tag}")
-        ordered.write.mode("overwrite").option("header", True).csv(path)
-        outputs[f"nodes-{tag}"] = path
+        .distinct()
+        .collect()
+    ):
+        if key is None:
+            edge_tags.add(tag)
+        else:
+            node_keys.setdefault(tag, []).append(key)
+    node_cols = {
+        t: sorted(ks, key=lambda c: (c != ID_COLUMN, c))
+        for t, ks in sorted(node_keys.items())
+    }
+    headers = {
+        f"nodes-{t}": ",".join(csv_field(c) for c in cs + [":LABEL"])
+        for t, cs in node_cols.items()
+    }
+    headers.update(
+        (f"relationships-{t}", ":START_ID,:END_ID,:TYPE") for t in sorted(edge_tags)
+    )
+    if not headers:
+        return {}, {"n_property_rows": 0, "n_records_approx": 0, "n_edges": 0}
+    gid = {g: i for i, g in enumerate(headers)}
 
-    edge_tags = [r[0] for r in graph.edges.select("edge_tag").distinct().collect()]
-    for tag in sorted(edge_tags):
-        rels = graph.edges.filter(F.col("edge_tag") == tag).select(
-            F.col("src").alias(":START_ID"),
-            F.col("dst").alias(":END_ID"),
-            F.col("rel_type").alias(":TYPE"),
+    def tag_map(entries: dict[str, str]) -> Column:
+        return F.expr(
+            "map(" + ", ".join(f"{sql_string(t)}, {v}" for t, v in entries.items())
+            + ")"
         )
-        path = os.path.join(out_dir, f"relationships-{tag}")
-        rels.write.mode("overwrite").option("header", True).csv(path)
-        outputs[f"relationships-{tag}"] = path
-    return outputs
+
+    # One line per record: its properties in the group's column order
+    # (missing ones empty), then :LABEL.
+    cols = tag_map({
+        t: "array(" + ", ".join(sql_string(c) for c in cs) + ")"
+        for t, cs in node_cols.items()
+    })
+    node_gid = tag_map({t: str(gid[f"nodes-{t}"]) for t in node_cols})
+    node_lines = (
+        nodes.groupBy("root_tag", "record_seq", "record_id", "label")
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("flat_key", "value")))
+            .alias("props"),
+            F.count(F.lit(1)).alias("_props"),
+        )
+        .select(
+            F.element_at(node_gid, F.col("root_tag")).alias("gid"),
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.element_at(cols, F.col("root_tag")),
+                    lambda k: _csv_field_expr(F.try_element_at(F.col("props"), k)),
+                ),
+                _csv_field_expr(F.col("label")),
+            ).alias("line"),
+            "_props",
+            "record_id",
+        )
+    )
+    edge_gid = tag_map({t: str(gid[f"relationships-{t}"]) for t in edge_tags})
+    edge_lines = edges.select(
+        F.element_at(edge_gid, F.col("edge_tag")).alias("gid"),
+        F.concat_ws(
+            ",", *[_csv_field_expr(F.col(c)) for c in ("src", "dst", "rel_type")]
+        ).alias("line"),
+        F.lit(1).alias("_edge"),
+    )
+    # A SQL VALUES relation, not createDataFrame: a local Python list
+    # would make the write start a Python worker to unpickle it.
+    header_lines = spark.sql(
+        "SELECT *, true AS _header FROM VALUES "
+        + ", ".join(f"({gid[g]}, {sql_string(h)})" for g, h in headers.items())
+        + " AS t(gid, line)"
+    )
+
+    obs = Observation("neo4j_csv_counts")
+    lines = (
+        node_lines.unionByName(edge_lines, allowMissingColumns=True)
+        .unionByName(header_lines, allowMissingColumns=True)
+        .observe(obs, *_count_aggs())
+        # One task per group, header first: one file per group.
+        .repartition("gid")
+        .sortWithinPartitions("gid", F.col("_header").isNull())
+        .select("gid", "line")
+    )
+
+    tmp = tempfile.mkdtemp(prefix="_write-", dir=out_dir)
+    try:
+        # maxRecordsPerFile 0: a conf-wide cap must not split a group.
+        lines.write.mode("overwrite").option("maxRecordsPerFile", 0) \
+            .partitionBy("gid").text(tmp)
+        outputs = {}
+        for g, i in gid.items():
+            [part] = glob.glob(os.path.join(tmp, f"gid={i}", "part-*"))
+            group_dir = os.path.join(out_dir, g)
+            if os.path.exists(group_dir):
+                shutil.rmtree(group_dir)
+            os.makedirs(group_dir)
+            outputs[g] = os.path.join(group_dir, PART_FILE)
+            os.rename(part, outputs[g])
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return outputs, obs.get
 
 
 def build_import_args(outputs: dict[str, str], into: str) -> list[str]:
@@ -168,19 +320,17 @@ def run_import_publish(
 def observed_counts(graph: GedcomGraph) -> dict[str, int]:
     """Row-level pipeline metrics via ``df.observe`` (SURVEY op 26: the
     reference's read/write/skip event counters, re-expressed as
-    accumulator-backed observations riding the job that materializes the
-    data — no second scan, unlike a separate ``count()``).
+    accumulator-backed observations). Standalone, this runs one job, a
+    noop write over ``nodes_long`` and ``edges``; ``export_with_counts``
+    gets the same numbers from the CSV write with no extra job.
     """
-    from pyspark.sql import Observation
-
-    node_obs = Observation("node_metrics")
-    edge_obs = Observation("edge_metrics")
-    nodes = graph.nodes_long.observe(
-        node_obs,
-        F.count(F.lit(1)).alias("n_property_rows"),
-        F.approx_count_distinct("record_id").alias("n_records_approx"),
+    obs = Observation("graph_counts")
+    (
+        graph.nodes_long.select(F.lit(1).alias("_props"), "record_id")
+        .unionByName(
+            graph.edges.select(F.lit(1).alias("_edge")), allowMissingColumns=True
+        )
+        .observe(obs, *_count_aggs())
+        .write.format("noop").mode("overwrite").save()
     )
-    edges = graph.edges.observe(edge_obs, F.count(F.lit(1)).alias("n_edges"))
-    nodes.write.format("noop").mode("overwrite").save()
-    edges.write.format("noop").mode("overwrite").save()
-    return {**node_obs.get, **edge_obs.get}
+    return obs.get

@@ -539,8 +539,7 @@ class _GedcomPartFile(WriterCommitMessage):
 class GedcomWriter(DataSourceArrowWriter):
     """One ``part-*.ged`` per task into a job-unique staging dir;
     driver-side commit renames parts into place and writes a
-    ``_manifest.json`` marker last (same commit discipline as the
-    neo4jcsv sink). Each part is a VALID standalone GEDCOM file
+    ``_manifest.json`` marker last. Each part is a VALID standalone GEDCOM file
     provided records are partition-atomic and lines arrive in
     (record_seq, line_no) order — the writer fail-fasts on any
     order violation rather than silently emitting interleaved

@@ -47,12 +47,13 @@ def test_export_neo4j_csvs(spark, demo_graph, tmp_path):
 
 def test_build_import_args(tmp_path):
     args = build_import_args(
-        {"nodes-INDI": "/x/nodes-INDI", "relationships-HUSB": "/x/relationships-HUSB"},
+        {"nodes-INDI": "/x/nodes-INDI/part-00000.csv",
+         "relationships-HUSB": "/x/relationships-HUSB/part-00000.csv"},
         into="/db/tmp",
     )
     assert args[:2] == ["--into", "/db/tmp"]
-    assert ("--nodes", "/x/nodes-INDI") == tuple(args[2:4])
-    assert ("--relationships", "/x/relationships-HUSB") == tuple(args[4:6])
+    assert ("--nodes", "/x/nodes-INDI/part-00000.csv") == tuple(args[2:4])
+    assert ("--relationships", "/x/relationships-HUSB/part-00000.csv") == tuple(args[4:6])
 
 
 def test_atomic_publish_swap_and_backup(tmp_path):
@@ -199,9 +200,17 @@ def test_cli_run_import_flag(spark, tmp_path, monkeypatch):
     from node_gedcom_graph_spark.__main__ import main
 
     seen: list = []
-    monkeypatch.setattr(
-        subprocess, "call", lambda argv: (seen.append(list(argv)), 0)[1]
-    )
+    files: list = []
+
+    def call(argv):
+        seen.append(list(argv))
+        # neo4j-admin reads files: every group flag names an existing CSV.
+        files.extend(b for a, b in zip(argv, argv[1:])
+                     if a in ("--nodes", "--relationships"))
+        assert all(os.path.isfile(f) for f in files)
+        return 0
+
+    monkeypatch.setattr(subprocess, "call", call)
     src = tmp_path / "t.ged"
     src.write_text(DEMO_GEDCOM)
     dest = str(tmp_path / "db")
@@ -213,10 +222,11 @@ def test_cli_run_import_flag(spark, tmp_path, monkeypatch):
         "neo4j-admin", "neo4j", "neo4j",
     ]
     assert seen[1][-1] == "stop" and seen[2][-1] == "start"
+    assert files and all(f.endswith("/part-00000.csv") for f in files)
     assert os.path.isdir(dest)  # the imported .tmp dir became live
 
 
-def test_cli_end_to_end(spark, tmp_path):
+def test_cli_end_to_end(spark, tmp_path, capsys):
     """The `python -m node_gedcom_graph_spark` surface (the reference's
     index.js CLI): export, audits, argv, atomic publish with backup on
     the second run."""
@@ -237,6 +247,11 @@ def test_cli_end_to_end(spark, tmp_path):
     assert rc == 0
     backups = [d for d in os.listdir(tmp_path) if d.startswith("live.bak-")]
     assert len(backups) == 1  # second publish preserved the first as backup
+    # The printed argv names the published files, not the staging dir.
+    argv = capsys.readouterr().out.strip().splitlines()[-1].split()
+    named = [b for a, b in zip(argv, argv[1:]) if a in ("--nodes", "--relationships")]
+    assert f"{dest}/nodes-INDI/part-00000.csv" in named
+    assert all(os.path.isfile(f) and f.startswith(dest + "/") for f in named)
 
 
 def test_cli_stdin_source(spark, tmp_path, monkeypatch):
