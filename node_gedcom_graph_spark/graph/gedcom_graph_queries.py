@@ -70,8 +70,8 @@ def gedcom_graph_spouses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def gedcom_graph_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative-join BFS with early termination (depth 2 frontier is
-    empty on the demo tree, so the loop stops after one extra round)."""
+    """Frontier BFS with early termination (the depth-2 frontier is
+    empty on the demo tree, so the kernel stops after one round)."""
     return ancestors(_demo_edges(spark), max_depth=5)
 
 
@@ -84,7 +84,7 @@ def gedcom_graph_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def gedcom_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HashMin connected components over the undirected edge set."""
+    """Connected components over the undirected edge set."""
     return connected_components(_demo_edges(spark))
 
 
@@ -98,7 +98,7 @@ def gedcom_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def gedcom_graph_descendants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reverse BFS (ancestors flipped) over the demo tree."""
+    """Downward BFS (ancestors reversed) over the demo tree."""
     from node_gedcom_graph_spark.graph.queries import descendants
 
     return descendants(_demo_edges(spark), max_depth=5)

@@ -1,26 +1,27 @@
 """Property-graph queries over the extracted GEDCOM edges.
 
-The reference defers all graph semantics to Neo4j after bulk load; this
-engine answers the same traversals directly on the edges DataFrame
-(src, dst, rel_type, edge_tag) with joins — the GraphFrames model
-(vertices DF + edges DF) without the external package dependency.
+The reference leaves all graph semantics to Neo4j after bulk load; this
+engine answers the same queries itself over the edges DataFrame
+(src, dst, rel_type, edge_tag), the GraphFrames model (vertices DF +
+edges DF) without the external package.
 
 GEDCOM topology reminder: families are first-class nodes. An individual
 points at their family via 'Child in Family' (FAMC) / 'Spouse in Family'
 (FAMS); the family points back at members via 'Husband'/'Wife'/'Child'.
 Parent-of therefore traverses person -FAMC-> family -HUSB|WIFE-> person.
 
-Scale: every traversal below is an equi-join on ids (shuffle hash /
-sort-merge, Catalyst's pick; AQE handles skew). The iterative
-algorithms (ancestors BFS, connected components) use the standard
-frontier / HashMin patterns: per-iteration joins with early termination,
-localCheckpoint to truncate lineage so plans stay flat at depth.
+The one-hop lookups are equi-joins on ids. The iterative queries
+(``ancestors``, ``descendants``, ``connected_components``) run on the
+two kernels in ``graph/traverse.py``: one job per round, and no cached
+block outlives the call except the returned frame's.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from node_gedcom_graph_spark.graph.traverse import components, reach
 
 PARENT_RELS = ("Husband", "Wife")
 
@@ -83,172 +84,30 @@ def siblings(edges: DataFrame) -> DataFrame:
     )
 
 
+def _bfs(edges: DataFrame, up: bool, col: str, max_depth: int) -> DataFrame:
+    """(person, <col>, depth) over parent links, upward or downward."""
+    src, dst = ("child", "parent") if up else ("parent", "child")
+    link = parents_of(edges).select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).distinct()
+    first = link.select(
+        F.col("src").alias("person"), F.col("dst").alias(col), F.lit(1).alias("depth")
+    )
+    return reach(first, link, ("person", col), max_depth)
+
+
 def ancestors(edges: DataFrame, max_depth: int = 10) -> DataFrame:
-    """(person, ancestor, depth) — BFS over parent links.
-
-    Frontier-based iterative join: each round joins the current frontier
-    to the parent table (depth+1) and anti-joins already-found pairs, so
-    work shrinks monotonically; terminates early when the frontier
-    empties. localCheckpoint every round keeps the plan O(1) deep.
-    """
-    parent = parents_of(edges).select("child", "parent").distinct()
-    found = parent.select(
-        F.col("child").alias("person"),
-        F.col("parent").alias("ancestor"),
-        F.lit(1).alias("depth"),
-    ).localCheckpoint(eager=True)
-    frontier = found
-    for depth in range(2, max_depth + 1):
-        nxt = (
-            frontier.join(
-                parent, frontier["ancestor"] == parent["child"], "inner"
-            )
-            .select(
-                frontier["person"],
-                parent["parent"].alias("ancestor"),
-                F.lit(depth).alias("depth"),
-            )
-            .join(found.select("person", "ancestor"), ["person", "ancestor"], "left_anti")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        found = found.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return found
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(id, component) with component = min node id reachable (HashMin).
-
-    Treats edges as undirected. Each round every node adopts the minimum
-    label among itself and its neighbors; converges in O(diameter)
-    rounds with early termination, the standard DataFrame-only CC
-    (GraphFrames' algorithm shape) — each round is one shuffle on id.
-    """
-    # Superseded per-round checkpoints are EXPLICITLY freed: a
-    # DataFrame.localCheckpoint block is NOT released by unpersist()
-    # or Python GC (the JVM Dataset holds it), so without the
-    # unpersistRDD call below every round leaks one node-sized block —
-    # bounded at fixture scale, corpus-sized x rounds at 100 TB. The
-    # id-diff attribution is GUARDED to blocks whose callSite is a
-    # localCheckpoint (cached/persisted DataFrames report their plan
-    # string + action callSite instead), so a concurrently cached
-    # DataFrame in the same session can never be attributed to this
-    # loop and freed out from under its owner; only another
-    # interleaved localCheckpoint could collide, and this engine's
-    # query model is sequential.
-    jsc = edges.sparkSession.sparkContext._jsc.sc()
-
-    # r6 advice: the callSite string is Spark-version/path dependent —
-    # a prefix match that stops matching silently turns every
-    # per-round free below into a no-op and reinstates the leak this
-    # code exists to fix. Substring match ('localCheckpoint' anywhere
-    # in the rendered site), and the first checkpoint VERIFIES the
-    # attribution is alive: if the id-diff comes back empty, fall back
-    # to the unguarded diff (safe here — the engine's query model is
-    # sequential, so nothing else creates storage-tracked RDDs between
-    # the pre/post snapshots) and say so once.
-    def _rdd_ids(guarded: bool = True) -> set[int]:
-        return {
-            i.id()
-            for i in jsc.getRDDStorageInfo()
-            if not guarded or "localCheckpoint" in str(i.callSite())
-        }
-
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    pre = _rdd_ids()
-    pre_all = _rdd_ids(guarded=False)
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    labels_ids = _rdd_ids() - pre
-    use_guard = bool(labels_ids)
-    if not use_guard:
-        import warnings
-
-        warnings.warn(
-            "localCheckpoint callSite attribution found no blocks — "
-            "Spark is rendering call sites differently; falling back "
-            "to unguarded RDD id-diff for per-round block frees",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        labels_ids = _rdd_ids(guarded=False) - pre_all
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["id"])
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        pre = _rdd_ids(guarded=use_guard)
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        new_ids = _rdd_ids(guarded=use_guard) - pre
-        converged = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .isEmpty()
-        )
-        for rid in labels_ids:
-            jsc.unpersistRDD(rid, False)
-        labels, labels_ids = new_labels, new_ids
-        if converged:
-            break
-    return labels
+    """(person, ancestor, depth): every ancestor within ``max_depth``
+    generations, once, at its nearest depth."""
+    return _bfs(edges, True, "ancestor", max_depth)
 
 
 def descendants(edges: DataFrame, max_depth: int = 10) -> DataFrame:
-    """(person, descendant, depth) — the ancestors traversal reversed
-    (same frontier BFS: shrink-only work set, early termination,
-    localCheckpoint to keep plans O(1) deep)."""
-    child_parent = parents_of(edges).select("child", "parent").distinct()
-    found = child_parent.select(
-        F.col("parent").alias("person"),
-        F.col("child").alias("descendant"),
-        F.lit(1).alias("depth"),
-    ).localCheckpoint(eager=True)
-    frontier = found
-    for depth in range(2, max_depth + 1):
-        nxt = (
-            frontier.join(
-                child_parent,
-                frontier["descendant"] == child_parent["parent"],
-                "inner",
-            )
-            .select(
-                frontier["person"],
-                child_parent["child"].alias("descendant"),
-                F.lit(depth).alias("depth"),
-            )
-            .join(
-                found.select("person", "descendant"),
-                ["person", "descendant"],
-                "left_anti",
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        found = found.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return found
+    """(person, descendant, depth): ``ancestors`` walked downward."""
+    return _bfs(edges, False, "descendant", max_depth)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(id, component): each node labelled with the minimum node id in
+    its component, edges taken as undirected."""
+    return components(edges.select("src", "dst"))

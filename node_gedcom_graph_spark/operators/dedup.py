@@ -1142,13 +1142,15 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster", transitively: if A~B and B~C, drop two of {A,B,C} even
     when A~C is below threshold).
 
-    Scale: HashMin label propagation (graph/queries.connected_components)
-    — one shuffle on doc_id per round, O(cluster diameter) rounds, and
-    near-dup clusters are shallow (dup chains rarely exceed 2-3 hops);
-    `localCheckpoint` truncates lineage each round so the plan stays
-    O(1) deep. The DuckDB oracle computes the same fixpoint as a
-    recursive-CTE transitive closure — exponential in cluster size, fine
-    at oracle scale, which is exactly why the engine side uses HashMin.
+    Scale: connected components run on ``graph.traverse.components``
+    (via graph/queries.connected_components): seeded HashMin with two
+    pointer jumps per round, one shuffle on doc_id per round and
+    O(log diameter) rounds; near-dup clusters are shallow (dup chains
+    rarely exceed 2-3 hops), so a handful of rounds, each one
+    ``localCheckpoint`` job that the kernel frees once superseded. The
+    DuckDB oracle computes the same fixpoint as a recursive-CTE
+    transitive closure — exponential in cluster size, fine at oracle
+    scale, which is exactly why the engine side iterates instead.
 
     r7: CC runs on the REP-level pair graph (the collapse idiom's
     natural endpoint — every member of an exact-dup group carries
@@ -2500,129 +2502,6 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SUBSTR_W = int(os.environ.get("SUBSTR_DEDUP_W", "40"))
 
-# Rows per numpy hashing chunk inside the Arrow kernel: bounds the
-# per-task temporaries (~8 uint64 arrays -> ~64 MB/chunk) while keeping
-# the per-chunk Python dispatch overhead amortized over ~1M positions.
-_SUBSTR_ARROW_CHUNK = 1 << 20
-
-
-def _pos_window_hashes_arrow(docs: DataFrame, w: int) -> DataFrame:
-    """(doc_id, p, h): ``xxhash64(substring(text, p, w))`` for every
-    window position p (1-based chars), via a vectorized Arrow kernel —
-    bit-identical to the explode form (r11, guide §4.2), pinned by
-    test_substr_arrow_hashes_equal_explode.
-
-    The explode form materializes one JVM row per character position
-    and pays a per-row w-char substring copy + per-row hash call; here
-    a whole Arrow batch of documents is ONE contiguous UTF-8 buffer
-    (string arrays store concatenated bytes + offsets), so every
-    window hash over it is ~30 whole-array numpy operations per chunk
-    (node_gedcom_graph_spark/xxh64np.py — validated bit-equal to
-    Spark's xxhash64). Char positions equal byte positions on ASCII
-    text (the fast path); a document with multi-byte chars takes an
-    exact per-window scalar fallback over its encoded char windows.
-    Only (doc_id, text) cross the Python boundary (§4.1), and the
-    output rows are the same 24 B/position the explode form shipped.
-    """
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from node_gedcom_graph_spark.xxh64np import (
-            xxh64_bytes,
-            xxh64_windows,
-        )
-
-        out_fields = pa.schema(
-            [
-                ("doc_id", pa.int64()),
-                ("p", pa.int64()),
-                ("h", pa.int64()),
-            ]
-        )
-        for batch in batches:
-            ids = batch.column(0)
-            txt = batch.column(1)
-            if len(txt) == 0:
-                continue
-            if pa.types.is_large_string(txt.type):
-                odt = np.int64
-            else:
-                odt = np.int32
-            bufs = txt.buffers()
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                txt.offset : txt.offset + len(txt) + 1
-            ].astype(np.int64)
-            data = np.frombuffer(
-                bufs[2] if bufs[2] is not None else b"", dtype=np.uint8
-            )
-            blen = offs[1:] - offs[:-1]
-            clen = (
-                pc.fill_null(pc.utf8_length(txt), 0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            null = pc.is_null(txt).to_numpy(zero_copy_only=False)
-            ascii_ok = (~null) & (blen == clen) & (clen >= w)
-            # --- fast path: ASCII docs, fully vectorized ---
-            counts = np.where(ascii_ok, blen - w + 1, 0)
-            total = int(counts.sum())
-            if total:
-                buf = np.concatenate(
-                    [data, np.zeros(8, dtype=np.uint8)]
-                )
-                doc_idx = np.repeat(np.arange(len(txt)), counts)
-                csum = np.concatenate(
-                    [[0], np.cumsum(counts)[:-1]]
-                )
-                within = (
-                    np.arange(total, dtype=np.int64)
-                    - np.repeat(csum, counts)
-                )
-                starts = offs[:-1][doc_idx] + within
-                ids_np = ids.to_numpy(zero_copy_only=False).astype(
-                    np.int64
-                )
-                out_ids = ids_np[doc_idx]
-                for lo in range(0, total, _SUBSTR_ARROW_CHUNK):
-                    hi = min(lo + _SUBSTR_ARROW_CHUNK, total)
-                    hv = xxh64_windows(buf, starts[lo:hi], w).view(
-                        np.int64
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(out_ids[lo:hi]),
-                            pa.array(within[lo:hi] + 1),
-                            pa.array(hv),
-                        ],
-                        schema=out_fields,
-                    )
-            # --- exact fallback: multi-byte (non-ASCII) docs ---
-            slow = np.nonzero((~null) & (blen != clen) & (clen >= w))[0]
-            for i in slow:
-                t = txt[int(i)].as_py()
-                did = ids[int(i)].as_py()
-                n_pos = len(t) - w + 1
-                rows = [
-                    (did, p + 1, xxh64_bytes(t[p : p + w].encode()))
-                    for p in range(n_pos)
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([r[0] for r in rows], pa.int64()),
-                        pa.array([r[1] for r in rows], pa.int64()),
-                        pa.array([r[2] for r in rows], pa.int64()),
-                    ],
-                    schema=out_fields,
-                )
-
-    return docs.select("doc_id", "text").mapInArrow(
-        kernel, "doc_id bigint, p bigint, h bigint"
-    )
-
-
 def substring_dup_spans(docs: DataFrame, w: int = SUBSTR_W) -> DataFrame:
     """(doc_id, span_start, span_end, span_len): maximal character spans
     (1-based, inclusive) of DUPLICATED characters — the union of the
@@ -2656,39 +2535,21 @@ def substring_dup_spans(docs: DataFrame, w: int = SUBSTR_W) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    if os.environ.get("NGG_SUBSTR_ARROW", "0") == "1":
-        # r11 MEASURED REJECTION (guide §1.2/§4): the vectorized Arrow
-        # window-hash kernel (same (doc_id, p, h) rows, no per-char
-        # Generate fan-out; bit-equality pinned) LOST the interleaved
-        # sf10 A/B — explode 24.1-31.6 s / 610-735 cpu_s vs kernel
-        # 31.9-43.6 s / 892-1201 cpu_s (3 passes each, same session).
-        # The codegen'd explode already hashes a 40-char window in-JVM
-        # with no materialized text copies reaching the shuffle; the
-        # kernel pays two Arrow conversions (docs in, ~260 rows/doc
-        # out) plus Python-worker row assembly, which exceeds the
-        # vectorized-hash savings at this document shape (~300-char
-        # docs; numpy XXH64 measured ~2.5M windows/s/core vs the
-        # boundary tax of ~130M output rows at sf10). Kept as an
-        # opt-in (NGG_SUBSTR_ARROW=1) with equality tests so the
-        # trade-off stays re-measurable on wider documents, where the
-        # fan-out-to-text ratio changes.
-        pos = _pos_window_hashes_arrow(docs, w)
-    else:
-        pos = (
-            docs.filter(F.length("text") >= w)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.lit(1), F.length("text") - w + 1)
-                ).alias("p"),
-                "text",
-            )
-            .select(
-                "doc_id",
-                F.col("p").cast("bigint").alias("p"),
-                F.xxhash64(F.expr(f"substring(text, p, {w})")).alias("h"),
-            )
+    pos = (
+        docs.filter(F.length("text") >= w)
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.lit(1), F.length("text") - w + 1)
+            ).alias("p"),
+            "text",
         )
+        .select(
+            "doc_id",
+            F.col("p").cast("bigint").alias("p"),
+            F.xxhash64(F.expr(f"substring(text, p, {w})")).alias("h"),
+        )
+    )
     dup = (
         pos.withColumn(
             "c", F.count(F.lit(1)).over(W.partitionBy("h"))

@@ -23,6 +23,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from node_gedcom_graph_spark.graph.traverse import components, reach
 from node_gedcom_graph_spark.operators import persist_tracked, register
 from node_gedcom_graph_spark.sources.tables import load_table
 
@@ -60,6 +61,20 @@ def _persist_keyed(df: DataFrame, key: str) -> DataFrame:
     """
     return persist_tracked(
         df.repartition(F.col(key)).sortWithinPartitions(key)
+    )
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Both directions of the canonical (pa < pb) co-purchase edges, in
+    one inline pass (a two-branch union would evaluate the edge subtree
+    twice)."""
+    return edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
+                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
+            )
+        )
     )
 
 
@@ -525,16 +540,7 @@ def copurchase_pagerank_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HashMin connected-components in graph/queries.py).
     """
     edges = _copurchase_edges(spark, sf_dir)
-    # symmetrize with one inline pass over the cached edges (vs a
-    # two-branch unionAll that would evaluate the edge subtree twice).
-    sym = edges.select(
-        F.inline(
-            F.array(
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
-            )
-        )
-    )
+    sym = _symmetric(edges)
     degs = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     sym2 = sym.join(degs, "src").transform(persist_tracked)
     nn = F.broadcast(degs.agg(F.count(F.lit(1)).alias("n")))
@@ -621,14 +627,7 @@ def copurchase_label_propagation_3iter(
     # the cached partitioning/order removes the edge-side Exchange+Sort
     # from every iteration (_persist_keyed).
     sym = _persist_keyed(
-        edges.select(
-            F.inline(
-                F.array(
-                    F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                    F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
-                )
-            )
-        ),
+        _symmetric(edges),
         "dst",
     )
     labels = sym.select(F.col("src").alias("p")).distinct().select(
@@ -699,14 +698,7 @@ def copurchase_bfs_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     join with lineage checkpoints every ~10 hops.
     """
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.select(
-        F.inline(
-            F.array(
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
-            )
-        )
-    ).transform(persist_tracked)
+    sym = _symmetric(edges).transform(persist_tracked)
     seeds = sym.filter(F.col("src") % 500 == 0).select("src").distinct()
     h1 = (
         seeds.join(sym, "src")
@@ -1019,104 +1011,24 @@ def copurchase_cc_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONVERGENCE (round-3 verdict item 4): every part labeled with the
     minimum part key reachable from it.
 
-    Algorithm: HashMin label propagation accelerated with TWO pointer
-    jumps per round (component <- label(component), twice) — the
-    path-doubling idea from Kiveris et al.'s "Connected Components in
-    MapReduce and Beyond" (SOCC'14) large-star/small-star family —
-    which cuts rounds from O(diameter) to O(log d): measured 6 rounds
-    instead of 11 on the sf0.01 graph (diameter ~11). Labels only ever
-    DECREASE, so the per-round convergence signature is just
-    sum(component): unchanged sum <=> no label moved <=> fixpoint.
-    The signature is evaluated by an ``observe`` on the same job that
-    materializes the round's ``localCheckpoint``, so each round is one
-    Spark job and the driver holds only a scalar.
-
-    Round shape (r10): the seed round is ONE aggregate over the
-    symmetric edges — with component(v)=v initially, the HashMin step
-    is exactly ``least(a, min(b))`` per node, so no label table exists
-    yet and nothing is joined or checkpointed before the loop:
-    strictly less work than the old init (distinct + checkpoint + a
-    full join round) at every scale, same labels out. Two further
-    variants were measured and REJECTED as small-scale-only or worse:
-    fusing later rounds into join→union-with-self→one min-aggregate
-    won at sf0.1 (stage-wave bound) but cost ~20% more CPU at sf10
-    (min-of-reps process-tree CPU 237.5 vs 192.9 s — the union ships
-    the full label table into the aggregate exchange each round,
-    where the left-join form lets AQE broadcast the aggregated
-    nbr_min side instead); a third pointer jump lost outright
-    (7.04 vs 4.00 s at sf0.1).
+    Engine: ``graph.traverse.components`` — seeded HashMin with two
+    pointer jumps per round (Kiveris et al., SoCC 2014), O(log d)
+    rounds: 6 instead of plain HashMin's 11 on the sf0.01 graph
+    (diameter ~11). Two further variants were measured and REJECTED:
+    fusing rounds into join→union-with-self→one min-aggregate won at
+    sf0.1 but cost ~20% more CPU at sf10 (the union ships the full
+    label table into the aggregate exchange each round), and a third
+    pointer jump lost outright (7.04 vs 4.00 s at sf0.1).
 
     Oracle: DuckDB WITH RECURSIVE min-reachability closure (node,
     seed) pairs, then MIN per node — exact, order-independent, but
     quadratic in component size, which is why it is the ORACLE (gate
-    runs at sf0.01: ~1.9k nodes) and the HashMin loop is the engine.
-
-    Scale: per round, one shuffle-on-node aggregate over the
-    symmetrized edges plus broadcast-sized label joins; state is one
-    row per node; lineage O(1) via per-round checkpoints. The min
-    aggregate is skew-tolerant (map-side combine), and pointer
-    jumping bounds rounds by log of the longest path.
+    runs at sf0.01: ~1.9k nodes) and the kernel is the engine.
     """
-    from pyspark.sql import Observation
-
     edges = _copurchase_edges(spark, sf_dir)
-    # Columnar persist for the STATIC symmetric edge list (the
-    # copurchase_bfs_converged sf100 lesson: localCheckpoint's
-    # row-format heap blocks OOM the local JVM near a billion directed
-    # edges; the compressed columnar cache is ~a tenth the footprint
-    # and spills to disk). Per-round tables keep localCheckpoint —
-    # that's the lineage cut. Keyed on b: the per-round join is
-    # sym.b == labels.id, so the cached partitioning/order kills the
-    # edge-side Exchange+Sort in every round (_persist_keyed).
-    sym = _persist_keyed(
-        edges.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        .unionByName(edges.select(F.col("pb").alias("a"), F.col("pa").alias("b"))),
-        "b",
-    )
-    sym.count()  # eager: materialize once before the rounds begin
-    labels = None  # seed round derives labels straight from sym
-    sig = None
-    for rnd in range(64):  # hard backstop; convergence test is the signature
-        if labels is None:
-            # Seed: component(v)=v, so HashMin == least(a, min(b)) in
-            # one aggregate — no init checkpoint, no join.
-            m = (
-                sym.groupBy("a")
-                .agg(F.min("b").alias("nb"))
-                .select(
-                    F.col("a").alias("id"),
-                    F.least("a", "nb").alias("component"),
-                )
-            )
-        else:
-            nbr_min = (
-                sym.join(labels, sym["b"] == labels["id"])
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            m = labels.join(nbr_min, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-            )
-        for _ in range(2):  # pointer jumps: component <- label(component)
-            lk = m.select(F.col("id").alias("cid"), F.col("component").alias("cc"))
-            m = m.join(lk, m["component"] == lk["cid"], "left").select(
-                "id", F.coalesce("cc", "component").alias("component")
-            )
-        obs = Observation(f"cc_sig_{rnd}_{id(m)}")
-        new = m.observe(obs, F.sum("component").alias("s")).localCheckpoint(
-            eager=True
-        )
-        s_now = obs.get["s"]
-        labels = new
-        if s_now == sig:
-            break
-        sig = s_now
-    else:
-        raise RuntimeError("connected components did not converge in 64 rounds")
-    return labels.select(
+    return components(
+        edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+    ).select(
         F.col("id").cast("bigint").alias("part_key"),
         F.col("component").cast("bigint").alias("component"),
     )
@@ -1358,14 +1270,10 @@ def copurchase_bfs_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bfs_recursive_sql), and now the distance map of the seed's whole
     component.
 
-    Per round: frontier ⋈ edges (one shuffle on the node key), distinct,
-    LEFT ANTI against the settled distance set (first arrival IS the
-    BFS distance, so no re-expansion — each node expands exactly once
-    across the whole run, giving total work O(E) like the textbook
-    queue algorithm, not O(E * rounds)). Both the frontier and the
-    settled set are localCheckpoint-ed every round, so lineage depth
-    is O(1) and the convergence probe (frontier count, read off the
-    checkpoint job via Observation) costs no extra job.
+    Engine: ``graph.traverse.reach``. Per round: frontier ⋈ edges,
+    distinct, LEFT ANTI against the settled distance set (first arrival
+    IS the BFS distance, so each node expands exactly once: total work
+    O(E) like the textbook queue algorithm, not O(E * rounds)).
 
     The oracle is DuckDB's recursive walk bounded at {BFS_FIX_UNROLL}
     hops with MIN(dist): min-over-walks equals BFS distance once the
@@ -1375,54 +1283,12 @@ def copurchase_bfs_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint gate uses (dedup-UNION recursion keeps the oracle's state
     to distinct (node, dist) pairs, never the walk set).
     """
-    from pyspark.sql import Observation
-
     edges = _copurchase_edges(spark, sf_dir)
-    # COLUMNAR persist for the (static) symmetric edge list, NOT
-    # localCheckpoint: localCheckpoint materializes row-format blocks
-    # on the heap (~32 B+overhead per edge, deserialized), which OOMed
-    # the 32 g local JVM at the sf100 tier (~0.9 B directed edges);
-    # the DataFrame cache stores compressed columnar batches
-    # (long-delta encoding, ~a tenth the footprint) and spills cleanly
-    # to disk. Lineage is static (one projection over the cached edge
-    # table), so the checkpoint's lineage-cut wasn't buying anything —
-    # the per-ROUND tables (frontier, dist) keep localCheckpoint,
-    # which is what bounds lineage depth. Keyed on src (the per-round
-    # frontier-join key) so no round re-exchanges the edges.
-    sym = _persist_keyed(
-        edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionByName(
-            edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        ),
-        "src",
-    )
-    sym.count()  # eager: materialize once before the rounds begin
     seed = edges.agg(F.min("pa")).collect()[0][0]
-    dist = spark.createDataFrame(
-        [(int(seed), 0)], "node long, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for rnd in range(1, BFS_FIX_UNROLL + 1):
-        obs = Observation(f"bfs_frontier_{rnd}_{id(frontier)}")
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(rnd).cast("int").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"BFS did not converge within {BFS_FIX_UNROLL} rounds; raise "
-            "BFS_FIX_UNROLL (and regenerate the oracle bound)"
-        )
-    return dist
+    first = spark.createDataFrame([(int(seed), 0)], "node long, depth int")
+    return reach(
+        first, _symmetric(edges), ("node",), BFS_FIX_UNROLL, strict=True
+    ).withColumnRenamed("depth", "dist")
 
 
 # ------------------------------------- weighted SSSP to fixpoint
@@ -1619,50 +1485,20 @@ def copurchase_harmonic_centrality_seeds(
     (the PageRank contribution pattern), so the aggregate is
     bit-equal across engines.
     """
-    from pyspark.sql import Observation
-
     edges = _copurchase_edges(spark, sf_dir)
-    # Columnar persist for the static symmetric edge list (the
-    # copurchase_bfs_converged sf100 OOM lesson), keyed on src — the
-    # multi-source frontier join key (_persist_keyed).
-    sym = _persist_keyed(
-        edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionByName(
-            edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        ),
-        "src",
-    )
-    sym.count()  # eager: materialize once before the rounds begin
+    sym = _symmetric(edges)
     seeds = [
         r.src
         for r in sym.select("src").distinct().orderBy("src").limit(
             HARMONIC_N_SEEDS
         ).collect()
     ]
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in seeds], "seed long, node long, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for rnd in range(1, BFS_FIX_UNROLL + 1):
-        obs = Observation(f"msbfs_{rnd}_{id(frontier)}")
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(dist, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(rnd).cast("int").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"multi-source BFS did not converge within {BFS_FIX_UNROLL} "
-            "rounds; raise BFS_FIX_UNROLL (and the oracle bound)"
-        )
+    first = spark.createDataFrame(
+        [(int(s), int(s), 0) for s in seeds], "seed long, node long, depth int"
+    )
+    dist = reach(
+        first, sym, ("seed", "node"), BFS_FIX_UNROLL, strict=True
+    ).withColumnRenamed("depth", "dist")
     return (
         dist.filter(F.col("dist") > 0)
         .groupBy(F.col("node").cast("bigint").alias("part_key"))
@@ -1969,14 +1805,7 @@ def copurchase_ppr_seeds3(spark: SparkSession, sf_dir: str) -> DataFrame:
     alive even when no mass flows back to them yet.
     """
     edges = _copurchase_edges(spark, sf_dir)
-    sym = edges.select(
-        F.inline(
-            F.array(
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")),
-            )
-        )
-    )
+    sym = _symmetric(edges)
     degs = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     sym2 = sym.join(degs, "src").transform(persist_tracked)
     seeds = degs.select("src").orderBy("src").limit(PPR_N_SEEDS).select(

@@ -11,7 +11,6 @@ rankings agree exactly with the oracle.
 from __future__ import annotations
 
 import random
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -272,52 +271,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= 10)
-
-
-def topk_cosine_arrow(
-    emb: DataFrame, queries_pd, k: int = 10
-) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: numpy matmul per batch with
-    per-partition partial top-k, then a global final top-k.
-
-    This is the physically fast form of topk_cosine (one C-speed GEMM
-    per Arrow batch instead of per-row array folds) — the partial/final
-    pattern means only n_queries * k rows per partition ever shuffle.
-    ``queries_pd``: pandas DataFrame with vec_id + embedding columns.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qids = queries_pd["vec_id"].to_numpy()
-    qm = np.stack(queries_pd["embedding"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    require_nonzero_norms(qn, "topk_cosine_arrow (query panel)")
-
-    def partial(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            nm = np.linalg.norm(m, axis=1)
-            require_nonzero_norms(nm, "topk_cosine_arrow (corpus batch)")
-            sims = (qm @ m.T) / (qn[:, None] * nm[None, :])
-            out = []
-            kk = min(k + 1, sims.shape[1])
-            for qi in range(len(qids)):
-                idx = np.argpartition(-sims[qi], kk - 1)[:kk]
-                for j in idx:
-                    if ids[j] != qids[qi]:
-                        out.append((int(qids[qi]), int(ids[j]), float(sims[qi, j])))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
-
-    partials = emb.select("vec_id", "embedding").mapInPandas(
-        partial, "query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return partials.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
-    )
 
 
 # ------------------------------------------------------------------ IVF
@@ -1817,7 +1770,8 @@ def lloyd_iterate(
 ) -> tuple[DataFrame, int]:
     """Cosine k-means Lloyd iteration TO CONVERGENCE: (assignments,
     rounds_run). The convergence layer's k-means member, alongside
-    connected_components (HashMin) and the k-core fixpoint peel.
+    connected_components (graph/traverse.py) and the k-core fixpoint
+    peel.
 
     Each round is exactly the oracle-gated embedding_kmeans_lloyd2
     step pair — broadcast E-step against the current fixed-k centroid

@@ -14,7 +14,6 @@ from node_gedcom_graph_spark.operators.multimodal import (
     attach_binary_metadata,
     extract_image_features,
 )
-from node_gedcom_graph_spark.operators.similarity import topk_cosine, topk_cosine_arrow
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -111,16 +110,6 @@ def test_simhash_near_identical_close(spark, docs):
     assert rows[1] == rows[2]
     ham = lambda x, y: sum(bin(a ^ b).count("1") for a, b in zip(x, y))  # noqa: E731
     assert ham(rows[1], rows[3]) < ham(rows[1], rows[4])
-
-
-def test_topk_cosine_arrow_matches_exact(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    exact = topk_cosine(emb, queries, k=5)
-    arrow = topk_cosine_arrow(emb, queries.toPandas(), k=5)
-    e = {(r.query_id, r.rnk): r.neighbor_id for r in exact.collect()}
-    a = {(r.query_id, r.rnk): r.neighbor_id for r in arrow.collect()}
-    assert e == a
 
 
 def test_dot_f32_deterministic(spark):

@@ -8,6 +8,7 @@ from node_gedcom_graph_spark.graph.queries import (
     ancestors,
     children_of,
     connected_components,
+    descendants,
     parents_of,
     siblings,
     spouses,
@@ -84,6 +85,111 @@ def test_connected_components_two_clusters(edges):
     main = {comp[x] for x in ("G1", "G2", "I1", "I2", "I3", "I4", "FG", "F1")}
     other = {comp[x] for x in ("Z1", "FZ")}
     assert len(main) == 1 and len(other) == 1 and main != other
+
+
+def test_descendants_rows(edges):
+    got = {(r.person, r.descendant, r.depth) for r in descendants(edges).collect()}
+    assert got == {
+        ("G1", "I1", 1), ("G2", "I1", 1),
+        ("I1", "I3", 1), ("I1", "I4", 1), ("I2", "I3", 1), ("I2", "I4", 1),
+        ("G1", "I3", 2), ("G1", "I4", 2), ("G2", "I3", 2), ("G2", "I4", 2),
+    }
+
+
+# Pedigree collapse: X is P's grandfather through A and great-grandfather
+# through B -> C, so X is reachable from P at depth 2 and at depth 3.
+COLLAPSE = """\
+0 @P@ INDI
+1 FAMC @F1@
+0 @A@ INDI
+1 FAMS @F1@
+1 FAMC @F2@
+0 @B@ INDI
+1 FAMS @F1@
+1 FAMC @F3@
+0 @C@ INDI
+1 FAMS @F3@
+1 FAMC @F4@
+0 @X@ INDI
+1 FAMS @F2@
+1 FAMS @F4@
+0 @F1@ FAM
+1 HUSB @A@
+1 WIFE @B@
+1 CHIL @P@
+0 @F2@ FAM
+1 HUSB @X@
+1 CHIL @A@
+0 @F3@ FAM
+1 HUSB @C@
+1 CHIL @B@
+0 @F4@ FAM
+1 HUSB @X@
+1 CHIL @C@
+"""
+
+
+def _edges_of(spark, gedcom):
+    lines = assign_records(lines_from_string(spark, gedcom, n_partitions=2))
+    return extract_graph(lines).edges
+
+
+def test_pedigree_collapse_keeps_min_depth(spark):
+    e = _edges_of(spark, COLLAPSE)
+    anc = [(r.person, r.ancestor, r.depth) for r in ancestors(e).collect()]
+    assert sorted(a for a in anc if a[0] == "P") == [
+        ("P", "A", 1), ("P", "B", 1), ("P", "C", 2), ("P", "X", 2),
+    ]
+    assert len(anc) == len(set((p, a) for p, a, _ in anc))
+    desc = [(r.person, r.descendant, r.depth) for r in descendants(e).collect()]
+    assert sorted(d for d in desc if d[0] == "X") == [
+        ("X", "A", 1), ("X", "B", 2), ("X", "C", 1), ("X", "P", 2),
+    ]
+    assert len(desc) == len(set((p, d) for p, d, _ in desc))
+
+
+def _chain_gedcom(generations):
+    """A single line of descent: person k is the only child of person
+    k+1's family, for ``generations`` families (2 * generations + 1
+    nodes in one path-shaped component)."""
+    out = []
+    for k in range(generations + 1):
+        out.append(f"0 @I{k:02d}@ INDI")
+        if k:
+            out.append(f"1 FAMS @F{k:02d}@")
+        if k < generations:
+            out.append(f"1 FAMC @F{k + 1:02d}@")
+    for k in range(1, generations + 1):
+        out += [f"0 @F{k:02d}@ FAM", f"1 HUSB @I{k:02d}@", f"1 CHIL @I{k - 1:02d}@"]
+    return "\n".join(out) + "\n"
+
+
+def test_connected_components_long_chain_converges(spark):
+    e = _edges_of(spark, _chain_gedcom(30))
+    comp = {r.id: r.component for r in connected_components(e).collect()}
+    assert len(comp) == 61
+    assert set(comp.values()) == {min(comp)}
+
+
+def _storage_entries(spark):
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_traversals_free_their_blocks(spark, edges, monkeypatch):
+    edges.count()  # materialize the fixture's own cache first
+    kept = []
+    for fn in (ancestors, descendants, connected_components):
+        before = _storage_entries(spark)
+        kept.append(fn(edges))
+        assert _storage_entries(spark) <= before + 1, fn.__name__
+
+    from node_gedcom_graph_spark.graph import traverse
+
+    monkeypatch.setattr(traverse, "MAX_ROUNDS", 1)
+    before = _storage_entries(spark)
+    with pytest.raises(RuntimeError):
+        connected_components(edges)
+    assert _storage_entries(spark) <= before
 
 
 def _synth_lineitem(tmp_path, pairs):

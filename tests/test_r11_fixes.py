@@ -117,83 +117,6 @@ def test_bucketed_gaps_equal_global_window(spark):
     assert got == want and len(got) == 1197
 
 
-def test_numpy_xxh64_matches_spark(spark):
-    """r11 kernel pin: the numpy XXH64 implementation is bit-identical
-    to Spark's xxhash64 (seed 42) across lengths covering every tail
-    path (0 blocks / blocks + 8-byte, 4-byte, 1-byte tails)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from node_gedcom_graph_spark.xxh64np import xxh64_bytes
-
-    random.seed(7)
-    strings = [
-        "".join(
-            chr(random.randint(32, 126))
-            for _ in range(random.randint(1, 120))
-        )
-        for _ in range(200)
-    ] + ["a" * 32, "b" * 40, "c" * 64, "d" * 39, "e" * 7, "f" * 4, "g"]
-    df = spark.createDataFrame([(s,) for s in strings], "s string")
-    want = [r[0] for r in df.select(F.xxhash64("s")).collect()]
-    got = [xxh64_bytes(s.encode()) for s in strings]
-    assert got == want
-
-
-def test_substr_arrow_hashes_equal_explode(spark):
-    """r11 rewrite pin: the Arrow window-hash kernel emits exactly the
-    explode form's (doc_id, p, h) rows — on the gate fixture and on a
-    synthetic set exercising multi-byte chars (per-window scalar
-    fallback), short docs, empty and null text."""
-    from pyspark.sql import functions as F
-
-    from node_gedcom_graph_spark.operators.dedup import (
-        SUBSTR_W,
-        _pos_window_hashes_arrow,
-    )
-    from node_gedcom_graph_spark.sources.tables import load_table
-
-    def explode_form(docs, w):
-        return (
-            docs.filter(F.length("text") >= w)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.lit(1), F.length("text") - w + 1)
-                ).alias("p"),
-                "text",
-            )
-            .select(
-                "doc_id",
-                F.col("p").cast("bigint").alias("p"),
-                F.xxhash64(
-                    F.expr(f"substring(text, p, {w})")
-                ).alias("h"),
-            )
-        )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    got = _rows(_pos_window_hashes_arrow(docs, SUBSTR_W))
-    want = _rows(explode_form(docs, SUBSTR_W))
-    assert got == want and len(got) > 100_000
-
-    synth = spark.createDataFrame(
-        [
-            (1, "héllo wörld mixed ascii and accents " * 3),
-            (2, "short"),
-            (3, None),
-            (4, ""),
-            (5, "abcdefghij" * 9),
-            (6, "日本語テキストの重複検出ウィンドウ" * 4),
-        ],
-        "doc_id long, text string",
-    )
-    got2 = _rows(_pos_window_hashes_arrow(synth, SUBSTR_W))
-    want2 = _rows(explode_form(synth, SUBSTR_W))
-    assert got2 == want2 and len(got2) > 0
-
-
 def test_incremental_base_state_served_equals_unserved(spark, monkeypatch):
     """r11 rewrite pin: copurchase_edges_incremental with the base
     pair-count state served from the per-fixture materialization is
