@@ -8,9 +8,11 @@ Design for 100 TB:
 - the exact pairwise Jaccard query is the *correctness baseline*
   (oracle-checked); its shingle self-join explodes quadratically inside
   shared-shingle buckets, so at scale you run the MinHash+LSH variant,
-  whose candidate generation touches only banded signature collisions
-  (tunable false-positive rate, zero false negatives above the S-curve
-  knee), then verifies candidates with the same exact Jaccard.
+  whose candidate generation touches only banded signature collisions,
+  then verifies candidates with the same exact Jaccard. At 16 bands of
+  4 slots a pair of Jaccard J becomes a candidate with probability
+  1 - (1 - J^4)^16: 0.64 at J = 0.5, 0.89 at 0.6, 0.988 at 0.7 and
+  0.9998 at 0.8. Below the knee pairs are missed, not mis-scored.
 - everything is built-in column functions (higher-order array ops +
   xxhash64); no Python in the hot path.
 """
@@ -18,7 +20,6 @@ Design for 100 TB:
 from __future__ import annotations
 
 import os
-import random
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,21 +29,19 @@ from node_gedcom_graph_spark.operators import persist_tracked, register
 from node_gedcom_graph_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------
-# MinHash parameters. (a, b) pairs are fixed at import from a seeded RNG
-# so signatures are reproducible across runs and cluster topologies.
-# h_j(x) = (a_j * (x mod P) + b_j) mod P with P = 2^31 - 1; the product
-# stays under 2^62, safely inside int64.
+# MinHash by densified one-permutation hashing (Li, Owen and Zhang,
+# "One Permutation Hashing", NeurIPS 2012; Shrivastava and Li,
+# "Densifying One Permutation Hashing via Rotation", ICML 2014). Each
+# shingle is hashed once with xxhash64; the low bits pick one of 64
+# bins, the top 52 bits are the value, and a slot is its bin's minimum.
+# An empty bin takes the minimum of the next non-empty bin to its right,
+# circularly, plus 2^52 per bin walked, so a borrowed value never equals
+# a bin's own one. A signature depends only on the shingle set.
 # ---------------------------------------------------------------------
-MINHASH_P = 2_147_483_647
 NUM_HASHES = 64
 LSH_BANDS = 16
 LSH_ROWS = NUM_HASHES // LSH_BANDS  # 4 -> similarity knee ~ (1/16)^(1/4) ~ 0.5
-
-_rng = random.Random(42)
-MINHASH_COEFFS: list[tuple[int, int]] = [
-    (_rng.randrange(1, MINHASH_P), _rng.randrange(0, MINHASH_P))
-    for _ in range(NUM_HASHES)
-]
+_VALUE_BITS = 52
 
 SHINGLE_K = 3
 
@@ -85,16 +84,99 @@ def shingled_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """64-slot MinHash signature (array<bigint>) of a shingle array."""
-    hashed = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_P)))
-    slots = [
-        F.array_min(
-            F.transform(hashed, lambda x: F.pmod(a * x + b, F.lit(MINHASH_P)))
+def shingle_hashes(shingles: Column) -> Column:
+    """xxhash64 of every shingle: the one hash the signature reads."""
+    return F.transform(shingles, lambda s: F.xxhash64(s))
+
+
+def _bin_keys(hashes: Column) -> Column:
+    """Sorted keys bin << 52 | value, bin = pmod(h, 64) and value =
+    h >>> 12: ascending keys put each bin's minimum first."""
+    return F.sort_array(
+        F.transform(
+            hashes,
+            lambda h: F.shiftleft(F.pmod(h, F.lit(NUM_HASHES)), _VALUE_BITS).bitwiseOR(
+                F.shiftrightunsigned(h, 64 - _VALUE_BITS)
+            ),
         )
-        for (a, b) in MINHASH_COEFFS
-    ]
-    return F.array(*slots)
+    )
+
+
+def _bin_minima(keys: Column) -> Column:
+    """The first key of each non-empty bin, in bin order: a key is kept
+    when its bin differs from the previous key's (-1 has bin -1)."""
+    return F.array_compact(
+        F.zip_with(
+            keys,
+            F.concat(F.array(F.lit(-1).cast("bigint")), keys),
+            lambda k, p: F.when(
+                F.shiftright(k, _VALUE_BITS) != F.shiftright(p, _VALUE_BITS), k
+            ),
+        )
+    )
+
+
+def _densify(minima: Column) -> Column:
+    """Expand the bin minima to all 64 slots. Minimum k of bin b fills
+    itself and the empty bins after the previous non-empty bin, slot t
+    getting k - (t << 52) = value + (b - t) * 2^52. The first minimum,
+    repeated 64 bins on, fills the wrap-around bins after the last one;
+    the first 64 slots are the signature. An empty shingle set gives
+    NULL."""
+    nxt = F.array_min(minima) + F.lit(NUM_HASHES << _VALUE_BITS)
+    prev = F.concat(F.array(F.lit(-1 << _VALUE_BITS)), minima)
+    runs = F.zip_with(
+        F.concat(minima, F.array(nxt)),
+        prev,
+        lambda k, p: F.transform(
+            F.sequence(
+                F.shiftright(p, _VALUE_BITS) + 1, F.shiftright(k, _VALUE_BITS)
+            ),
+            lambda t: k - F.shiftleft(t, _VALUE_BITS),
+        ),
+    )
+    return F.slice(F.flatten(runs), 1, NUM_HASHES)
+
+
+_SIGNATURE_STAGES = (_bin_keys, _bin_minima, _densify)
+
+
+def minhash_signature(shingles: Column) -> Column:
+    """64-slot MinHash signature (array<bigint>) of a shingle array, as
+    one expression. Row pipelines use with_minhash_signature, which
+    computes the same slots with each stage materialized once."""
+    col = shingle_hashes(shingles)
+    for stage in _SIGNATURE_STAGES:
+        col = stage(col)
+    return col
+
+
+def with_minhash_signature(df: DataFrame, hashes: str) -> DataFrame:
+    """``df`` plus a ``sig`` column: the minhash_signature of the shingle
+    hash array in column ``hashes``. Each stage is its own projection
+    and no lambda reads a column, so no stage is re-evaluated per array
+    element (Spark does not share subexpressions through lambdas)."""
+    keep, col = df.columns, hashes
+    for i, stage in enumerate(_SIGNATURE_STAGES):
+        df = df.select(*keep, stage(F.col(col)).alias(f"_sig{i}"))
+        col = f"_sig{i}"
+    return df.select(*keep, F.col(col).alias("sig"))
+
+
+def lsh_band_buckets(sig: Column) -> Column:
+    """One (band, bucket) struct per LSH band of a 64-slot signature:
+    bucket = xxhash64 of the band's 4 slots."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.xxhash64(
+                    *[F.element_at(sig, i * LSH_ROWS + r + 1) for r in range(LSH_ROWS)]
+                ).alias("bucket"),
+            )
+            for i in range(LSH_BANDS)
+        ]
+    )
 
 
 # ----------------------------------------------------------------- exact
@@ -577,9 +659,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs only (array_intersect on the two shingle sets).
     Candidate generation cost is bucket-local; no all-pairs stage
     anywhere, which is what makes this the 100 TB path. Deterministic:
-    fixed seeded hash coefficients. (Correctness of the end result is
-    cross-checked against dedup_ngram_jaccard in tests — LSH recall at
-    this band shape is ~1 for J >= 0.5 pairs.)
+    the signature is densified one-permutation hashing over xxhash64,
+    with no random coefficients. Recall is the banding S-curve, for independent
+    slots P(candidate) = 1 - (1 - J^4)^16: 0.64 at J = 0.5, 0.89 at
+    0.6, 0.988 at 0.7 and 0.9998 at 0.8; a pair is never reported
+    below the 0.35 threshold, but pairs near it can be missed. (Tests
+    cross-check the result against dedup_ngram_jaccard on a corpus
+    whose near-duplicate pairs all have J >= 0.89.)
 
     r7 (sf100 disk-fill fix): the pipeline runs over DISTINCT texts —
     identical texts share identical signatures, so at 1000-way
@@ -611,37 +697,19 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.35) -> DataFrame:
     see dedup_minhash_lsh for the design narrative. Also the oracle the
     streaming twin (streaming.pipeline.stream_dedup_minhash) is pinned
     against in tests."""
-    base = shingled_docs(docs)
-
-    # Signature via explode + 64-way min agg (identical values to
-    # minhash_signature's array form — min is order-blind — but the agg
-    # shape keeps codegen small and gets map-side partials, instead of
-    # one gigantic per-row expression tree).
-    hashed = base.select(
-        "doc_id", F.explode("shingles").alias("s")
-    ).select("doc_id", F.pmod(F.xxhash64("s"), F.lit(MINHASH_P)).alias("h"))
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(a * F.col("h") + b, F.lit(MINHASH_P))).alias(f"m{j}")
-            for j, (a, b) in enumerate(MINHASH_COEFFS)
-        ]
+    # The signature and both verification sides read the shingles from
+    # one exchange: Spark reuses an identical exchange, so the corpus is
+    # tokenized and shingled once instead of three times (a cold
+    # 4,000-document pass, C1 JIT, 4 vCPU: ~9.5 -> ~8 s; warm 4.2 ->
+    # 2.9 s). At 100 TB, gate verification to candidate documents
+    # instead: materialize `cand` (tiny) first, then
+    #   cand_sh = shingled_docs(docs.join(cand.ids, "doc_id", "left_semi"))
+    base = shingled_docs(docs).repartition("doc_id")
+    sigs = with_minhash_signature(
+        base.select("doc_id", shingle_hashes(F.col("shingles")).alias("h")), "h"
     )
-
     bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"m{i * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-                        ).alias("bucket"),
-                    )
-                    for i in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bk"),
+        "doc_id", F.explode(lsh_band_buckets(F.col("sig"))).alias("bk")
     ).select("doc_id", "bk.band", "bk.bucket")
 
     a, b = bands.alias("a"), bands.alias("b")
@@ -656,24 +724,20 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.35) -> DataFrame:
         .dropDuplicates(["doc_a", "doc_b"])
     )
     # Exact-Jaccard verification joins the candidate pairs back to the
-    # shingle arrays. MEASURED CHOICE (sf0.1): re-deriving sh_a/sh_b
-    # from the full corpus costs two extra tokenizer passes (~0.3s each)
-    # but keeps the plan to 2 joins; gating the scan with a semi-join on
-    # the candidate id set (so only candidates re-shingle) added 3 AQE
-    # stage rounds and recomputed the signature pipeline on the build
-    # side (no exchange reuse across the divergently-replanned branches)
-    # — net 0.8s SLOWER here. At 100 TB flip to the gate: materialize
-    # `cand` (tiny) first, then
-    #   cand_sh = shingled_docs(docs.join(cand.ids, "doc_id", "left_semi"))
-    # so the two verification scans touch only candidate docs instead of
-    # re-tokenizing the corpus twice.
-    sh_a = base.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    # shingle arrays; the joins read `base` unrenamed, which keeps its
+    # exchange identical and so reused.
+    sa, sb = base.alias("sa"), base.alias("sb")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
+        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("sa.shingles").alias("sh_a"),
+            F.col("sb.shingles").alias("sh_b"),
+        )
         .withColumn("jaccard", inter.cast("double") / union)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")

@@ -77,14 +77,27 @@ def get_spark(
     # Static conf (builder-time only — cannot go in ENGINE_CONFS, which
     # is also applied to externally-created sessions via spark.conf.set):
     # the whole-stage-codegen class cache holds 100 entries by default.
-    # This engine's largest plans (the GEDCOM window/pivot stack, the
-    # 64-min MinHash aggregate) generate classes that a mixed workload
-    # evicts between runs, re-paying ~1-2 s of janino compilation per
-    # query — observed directly in bench.py as a 2x swing on the GEDCOM
-    # pipeline when it runs after nine other queries. A production
+    # This engine's largest plans (the GEDCOM window/pivot stack)
+    # generate classes that a mixed workload evicts between runs,
+    # re-paying ~1-2 s of janino compilation per query — observed
+    # directly in bench.py as a 2x swing on the GEDCOM pipeline when it
+    # runs after nine other queries. A production
     # engine serving many concurrent query shapes wants this cache sized
     # to its working set, not to a 100-entry default.
     builder = builder.config("spark.sql.codegen.cache.maxEntries", "2000")
+    # Static conf too: C1-only JIT. On a fresh JVM a 3k-person import
+    # (0.57 MB GEDCOM, 4 vCPU) spent ~20 of ~44 s of JVM CPU in the C2
+    # compiler threads, compiling code the run then barely used. With
+    # C1 only it uses ~19 s in all, and its wall time falls ~14%. The
+    # trade-off turns with input size: at 5.8 MB CPU still falls ~25%
+    # but wall time rises 4-12%, and at 19 MB C2's faster code pays for
+    # its compile (C1 costs ~9% more CPU and ~20% more wall time). Long
+    # batch imports should put -XX:TieredStopAtLevel=4 in
+    # spark.driver.extraJavaOptions: Spark appends those after these
+    # defaults, and HotSpot keeps the last.
+    builder = builder.config(
+        "spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1"
+    )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -266,8 +266,8 @@ def stream_dedup_minhash(
     batch ``operators.dedup.minhash_lsh_pairs`` (tests pin the two to
     the identical pair set on a multi-batch corpus).
 
-    Shape: per-document 64-slot MinHash signature (pure column
-    expressions, pinned equal to the batch agg-form signature) -> 16
+    Shape: per-document 64-slot MinHash signature (the batch
+    pipeline's ``with_minhash_signature``, per row) -> 16
     LSH band buckets per doc (same band/bucket hashing as batch, so the
     candidate space is identical) -> ``applyInPandasWithState`` keyed
     by (band, bucket). Bucket state holds (doc_id, shingle-hash set)
@@ -301,12 +301,11 @@ def stream_dedup_minhash(
 
     from node_gedcom_graph_spark.functions.scalar import tokens
     from node_gedcom_graph_spark.operators.dedup import (
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_COEFFS,
-        MINHASH_P,
         SHINGLE_K,
+        lsh_band_buckets,
+        shingle_hashes,
         shingles_from_tokens,
+        with_minhash_signature,
     )
 
     has_ts = watermark is not None
@@ -324,52 +323,14 @@ def stream_dedup_minhash(
     ).filter(F.size("toks") >= SHINGLE_K)
     sh_stage = toks.select(
         "doc_id", *ts_cols, shingles_from_tokens(F.col("toks")).alias("shingles")
-    ).select(
-        "doc_id",
-        *ts_cols,
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh"),
-    )
-    # h = pmod(xxhash64(shingle), P) — identical to the batch pipeline's
-    # hashed-shingle stream, so signatures match slot for slot.
-    hs_stage = sh_stage.select(
+    ).select("doc_id", *ts_cols, shingle_hashes(F.col("shingles")).alias("sh"))
+    # The batch pipeline's signature and band buckets, so the candidate
+    # space is identical.
+    banded = with_minhash_signature(sh_stage, "sh").select(
         "doc_id",
         *ts_cols,
         "sh",
-        F.transform("sh", lambda x: F.pmod(x, F.lit(MINHASH_P))).alias("hs"),
-    )
-    sig = hs_stage.select(
-        "doc_id",
-        *ts_cols,
-        "sh",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform("hs", lambda x: F.pmod(a * x + b, F.lit(MINHASH_P)))
-                )
-                for (a, b) in MINHASH_COEFFS
-            ]
-        ).alias("sig"),
-    )
-    banded = sig.select(
-        "doc_id",
-        *ts_cols,
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", i * LSH_ROWS + r + 1)
-                                for r in range(LSH_ROWS)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for i in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bk"),
+        F.explode(lsh_band_buckets(F.col("sig"))).alias("bk"),
     ).select("doc_id", *ts_cols, "sh", "bk.band", "bk.bucket")
 
     out_schema = "doc_a long, doc_b long, jaccard double"

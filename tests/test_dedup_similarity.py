@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from node_gedcom_graph_spark.operators.dedup import (
     dot_f32,
     minhash_signature,
+    shingle_hashes,
+    with_minhash_signature,
     word_shingles,
 )
 from node_gedcom_graph_spark.operators.multimodal import (
@@ -65,6 +67,59 @@ def test_minhash_identical_docs_identical_sigs(spark, docs):
     near_overlap = sum(a == b for a, b in zip(sigs[1], sigs[3])) / 64
     far_overlap = sum(a == b for a, b in zip(sigs[1], sigs[4])) / 64
     assert near_overlap > 0.6 > far_overlap
+
+
+def _densified_oph(hashes):
+    """Densified one-permutation signature in pure Python: bin h mod 64,
+    value h >>> 12 (unsigned), per-bin minimum; an empty bin takes the
+    next non-empty bin's minimum to its right, circularly, plus 2^52 per
+    bin walked."""
+    mins = [None] * 64
+    for h in hashes:
+        b, v = h % 64, (h % 2**64) >> 12
+        if mins[b] is None or v < mins[b]:
+            mins[b] = v
+    sig = []
+    for i in range(64):
+        d = 0
+        while mins[(i + d) % 64] is None:
+            d += 1
+        sig.append(mins[(i + d) % 64] + d * 2**52)
+    return sig
+
+
+def test_minhash_signature_matches_python_oph(spark):
+    """Spark's signature equals a pure-Python densified one-permutation
+    signature over Spark's own xxhash64 of each shingle, in both the
+    one-expression and the staged form."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(500)]
+    long_doc = " ".join(rng.choices(vocab, k=120))  # as long as a perfbench document
+    few = "one two three four five six seven eight nine ten eleven twelve"
+    rows = [(1, long_doc), (2, few), (3, "just three words")]
+    sh = word_shingles(F.col("text"))
+    df = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id",
+        shingle_hashes(sh).alias("h"),
+        minhash_signature(sh).alias("one_expr"),
+    )
+    got = {
+        r.doc_id: (r.h, r.one_expr, r.sig)
+        for r in with_minhash_signature(df, "h").collect()
+    }
+    # Fewer shingles than bins, and one shingle; all three documents
+    # leave some bins empty, so every one exercises densification.
+    assert [len(got[i][0]) for i in (2, 3)] == [10, 1]
+    assert all(len({h % 64 for h in got[i][0]}) < 64 for i in got)
+    for doc_id, (hashes, one_expr, staged) in got.items():
+        want = _densified_oph(hashes)
+        assert list(one_expr) == want, doc_id
+        assert list(staged) == want, doc_id
+    # One shingle: every slot is borrowed from its bin, each at a
+    # different distance, so all 64 values differ.
+    assert len(set(got[3][1])) == 64
 
 
 def test_minhash_lsh_agrees_with_exact_jaccard(spark):
