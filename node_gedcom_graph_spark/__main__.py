@@ -74,7 +74,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from node_gedcom_graph_spark.gedcom.extract import extract_graph
-    from node_gedcom_graph_spark.gedcom.parser import assign_records, read_gedcom_lines
+    from node_gedcom_graph_spark.gedcom.parser import read_gedcom_lines
     from node_gedcom_graph_spark.publish.neo4j_csv import (
         atomic_publish,
         build_import_args,
@@ -103,7 +103,7 @@ def main(argv: list[str] | None = None) -> int:
                 fh.write(sys.stdin.read())
             src = stdin_tmp
             print(f"reading STDIN -> {stdin_tmp}", file=sys.stderr)
-        lines = assign_records(read_gedcom_lines(spark, src))
+        lines = read_gedcom_lines(spark, src)
         graph = extract_graph(lines, persist=True)
 
         # Stage on the SAME filesystem as dest: atomic_publish swaps

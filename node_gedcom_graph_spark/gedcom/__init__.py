@@ -3,9 +3,7 @@ extraction (the reference pipeline's data plane, Spark-first)."""
 
 from node_gedcom_graph_spark.gedcom.extract import GedcomGraph, extract_graph  # noqa: F401
 from node_gedcom_graph_spark.gedcom.parser import (  # noqa: F401
-    assign_records,
     lines_from_string,
-    parse_lines,
     read_gedcom_lines,
 )
 from node_gedcom_graph_spark.gedcom import queries  # noqa: F401

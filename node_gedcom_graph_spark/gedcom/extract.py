@@ -346,7 +346,7 @@ def extract_graph(
     lines: DataFrame, max_depth: int | None = None, persist: bool = False
 ) -> GedcomGraph:
     """Run the full extraction over a lines IR that already carries
-    ``record_seq`` (see parser.assign_records).
+    ``record_seq`` (see parser: the scan numbers records).
 
     ``max_depth``: deepest level present; discovered with a cheap scalar
     aggregate when not supplied (GEDCOM nesting is shallow — spec max 99,

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from node_gedcom_graph_spark.gedcom.extract import GedcomGraph, extract_graph
 from node_gedcom_graph_spark.gedcom.fixtures import DEMO_GEDCOM
-from node_gedcom_graph_spark.gedcom.parser import assign_records, lines_from_string
+from node_gedcom_graph_spark.gedcom.parser import lines_from_string
 from node_gedcom_graph_spark.operators import register
 
 
@@ -61,7 +61,7 @@ def _demo_graph(spark: SparkSession) -> GedcomGraph:
     cached = _DEMO_GRAPH_CACHE.get(key)
     if cached is not None:
         return cached
-    lines = assign_records(lines_from_string(spark, DEMO_GEDCOM, n_partitions=3))
+    lines = lines_from_string(spark, DEMO_GEDCOM, n_partitions=3)
     g = extract_graph(lines, persist=True)
     _DEMO_GRAPH_CACHE[key] = g
     return g
@@ -183,56 +183,6 @@ def gedcom_nodes_wide_indi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("Name"),
         F.col("Sex"),
         F.col("Birth Date"),
-    )
-
-
-@register(
-    "gedcom_source_records",
-    oracle="""
-    SELECT * FROM (VALUES
-      (CAST(NULL AS VARCHAR), 'HEAD', CAST(4 AS BIGINT)),
-      ('I1', 'INDI', 10),
-      ('I2', 'INDI', 11),
-      ('I3', 'INDI', 4),
-      ('F1', 'FAM', 7),
-      ('X9', 'FOO', 2),
-      (NULL, 'INDI', 3),
-      (NULL, 'TRLR', 1)
-    ) t(record_id, root_tag, n_lines)
-    """,
-)
-def gedcom_source_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-record line counts read through the pluggable
-    `format("gedcom")` Python data source (SURVEY §2 ops 1-3 as a real
-    Spark source — sources/gedcom_datasource.py). split_size=64 bytes
-    forces the fixture through MANY byte-range splits, so the
-    record-boundary alignment (each split owns records whose level-0
-    line starts inside it, reads past its end to finish them) is
-    exercised by the correctness gate itself, not just unit tests.
-
-    The fixture rides the source's ``inline`` option — the content
-    serializes with the reader to every executor, so there's no
-    node-local filesystem assumption (cluster-safe, race-free, no temp
-    files)."""
-    from pyspark.sql import functions as F
-
-    from node_gedcom_graph_spark.sources.gedcom_datasource import GedcomDataSource
-
-    spark.dataSource.register(GedcomDataSource)
-    lines = (
-        spark.read.format("gedcom")
-        .option("split_size", "64")
-        .option("inline", DEMO_GEDCOM)
-        .load()
-    )
-    return (
-        lines.groupBy("record_seq")
-        .agg(
-            F.max(F.when(F.col("level") == 0, F.col("xref"))).alias("record_id"),
-            F.max(F.when(F.col("level") == 0, F.col("tag"))).alias("root_tag"),
-            F.count("*").alias("n_lines"),
-        )
-        .select("record_id", "root_tag", "n_lines")
     )
 
 

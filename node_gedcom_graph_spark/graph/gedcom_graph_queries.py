@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from node_gedcom_graph_spark.gedcom.extract import extract_graph
 from node_gedcom_graph_spark.gedcom.fixtures import DEMO_GEDCOM
-from node_gedcom_graph_spark.gedcom.parser import assign_records, lines_from_string
+from node_gedcom_graph_spark.gedcom.parser import lines_from_string
 from node_gedcom_graph_spark.graph.queries import (
     ancestors,
     connected_components,
@@ -32,7 +32,7 @@ def _demo_edges(spark: SparkSession) -> DataFrame:
     cached = _DEMO_EDGES_CACHE.get(key)
     if cached is not None:
         return cached
-    lines = assign_records(lines_from_string(spark, DEMO_GEDCOM, n_partitions=3))
+    lines = lines_from_string(spark, DEMO_GEDCOM, n_partitions=3)
     edges = extract_graph(lines).edges.localCheckpoint(eager=True)
     _DEMO_EDGES_CACHE[key] = edges
     return edges

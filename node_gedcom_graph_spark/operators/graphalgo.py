@@ -160,8 +160,7 @@ def _fixture_fingerprint(sf_dir: str, table: str = "lineitem") -> str | None:
     tar-restore of a different same-size snapshot) that pure stat
     triples cannot; an adversarially crafted fixture with identical
     head, sizes, and nanosecond mtimes is outside the contract —
-    the same immutable-fixture assumption the GEDCOM datasource's
-    file watermark documents (sources/gedcom_datasource.py)."""
+    fixtures are immutable."""
     from node_gedcom_graph_spark.sources.tables import part_files
 
     path = os.path.join(sf_dir.rstrip("/"), f"{table}.parquet")

@@ -30,9 +30,6 @@ ENGINE_CONFS: dict[str, str] = {
     # the plan shows ArrowEvalPythonUDTF (same semantics, columnar
     # transfer) — the only Python-UDTF surface is sentence splitting.
     "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-    # Let Python data sources (sources/gedcom_datasource.py) absorb
-    # filters via pushFilters — off by default in Spark 4.1.
-    "spark.sql.python.filterPushdown.enabled": "true",
     # InferFiltersFromGenerate adds size(e)>0/isnotnull(e) under every
     # explode; predicate pushdown then inlines the generator's whole
     # child expression into a pre-codegen Filter at the scan. For

@@ -112,28 +112,25 @@ def stream_gedcom_pipeline(
 
     foreachBatch gives the end-of-batch barrier the reference implements
     by hand (csv_writer.js:91-107); checkpointing makes the sink
-    effectively exactly-once across restarts. Record assembly happens
-    per batch (a GEDCOM file never straddles batches with the files
-    source, mirroring the reference's one-file-per-run contract).
+    effectively exactly-once across restarts. The stream scans the same
+    record-delimited chunks as a batch read, and each micro-batch goes
+    through the batch chunks -> lines path (a GEDCOM file never
+    straddles batches with the files source, mirroring the reference's
+    one-file-per-run contract), so ``record_seq`` and ``line_no`` are
+    numbered per batch.
     Returns the StreamingQuery; callers stop it or drain with
     availableNow.
     """
     from node_gedcom_graph_spark.gedcom.extract import extract_graph
-    from node_gedcom_graph_spark.gedcom.parser import assign_records, parse_lines
+    from node_gedcom_graph_spark.gedcom.parser import lines_from_chunks, scan_chunks
 
     apply_engine_confs(spark)
-    raw = spark.readStream.format("text").load(in_dir)
+    raw = scan_chunks(spark.readStream, in_dir)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # line numbering happens per micro-batch (monotonic ids are not
-        # defined on unbounded streams, only on materialized batches).
-        numbered = batch_df.select(
-            F.monotonically_increasing_id().alias("line_no"), "value"
-        )
-        lines = assign_records(parse_lines(numbered))
-        g = extract_graph(lines)
+        g = extract_graph(lines_from_chunks(batch_df))
         g.nodes_long.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
             f"{out_dir}/nodes"
         )

@@ -1,6 +1,10 @@
 """Golden tests pinning the GEDCOM extraction semantics to the reference
 (/root/reference/lib/csv_writer.js — each case cites the line it pins)."""
 
+import os
+from collections import Counter
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +14,7 @@ from node_gedcom_graph_spark.gedcom.parser import (
     assign_records,
     lines_from_string,
     read_gedcom_lines,
+    scan_chunks,
 )
 
 
@@ -302,3 +307,156 @@ def test_cont_conc_are_plain_properties_not_spliced(spark):
     assert props["Note"] == "first part"
     assert props["Note Continued"] == "third part"  # last CONT wins
     assert "second part" not in props.values()
+
+
+def test_on_disk_fixture_matches_embedded():
+    """tests/fixtures/demo.ged (FIXTURES.md §2) must stay in sync with
+    the embedded DEMO_GEDCOM the oracles are hand-computed against."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    on_disk = open(os.path.join(here, "fixtures", "demo.ged")).read()
+    assert on_disk == DEMO_GEDCOM
+
+
+# ------------------------------------------------------ record-delimited scan
+
+
+@contextmanager
+def spark_conf(spark, **conf):
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_read_gedcom_directory_one_partition(spark, tmp_path):
+    """Two small files share one scan partition: b.ged's first chunk
+    follows a.ged's chunks in that partition, at block start 0 like
+    them, and must still keep its own leading "0 "."""
+    d = tmp_path / "many"
+    d.mkdir()
+    (d / "a.ged").write_text(
+        "0 @A1@ INDI\n1 SEX M\n0 @A2@ INDI\n1 SEX F\n", encoding="utf-8"
+    )
+    (d / "b.ged").write_text(
+        "0 @B1@ FAM\n1 HUSB @A1@\n1 WIFE @A2@\n", encoding="utf-8"
+    )
+    one_partition = {
+        "spark.sql.files.minPartitionNum": "1",
+        "spark.sql.files.openCostInBytes": "1",
+    }
+    with spark_conf(spark, **one_partition):
+        assert scan_chunks(spark.read, str(d)).rdd.getNumPartitions() == 1
+        lines = read_gedcom_lines(spark, str(d))
+        records = sorted(
+            (tuple(ln[1:] for ln in sorted(ls)) for ls in _records(lines)), key=repr
+        )
+        g = extract_graph(lines)
+        edges = {(r.src, r.dst, r.rel_type) for r in g.edges.collect()}
+    assert records == [
+        ((0, "A1", "INDI", ""), (1, None, "SEX", "M")),
+        ((0, "A2", "INDI", ""), (1, None, "SEX", "F")),
+        ((0, "B1", "FAM", ""), (1, None, "HUSB", "@A1@"), (1, None, "WIFE", "@A2@")),
+    ]
+    assert edges == {("B1", "A1", "Husband"), ("B1", "A2", "Wife")}
+
+
+def _records(lines):
+    """Lines grouped by record_seq, in record_seq order, each record a
+    list of (line_no, level, xref, tag, value)."""
+    by_seq = {}
+    for r in lines.collect():
+        by_seq.setdefault(r.record_seq, []).append(
+            (r.line_no, r.level, r.xref, r.tag, r.value)
+        )
+    return [by_seq[s] for s in sorted(by_seq)]
+
+
+def _snapshot(lines):
+    """Records as ordered line tuples, plus the whole extract_graph
+    output with each record_seq replaced by its rank (a scanned file's
+    record_seq is unique and ordered but not dense)."""
+    records = _records(lines)
+    seqs = sorted({r.record_seq for r in lines.select("record_seq").collect()})
+    rank = {s: i for i, s in enumerate(seqs, 1)}
+    g = extract_graph(lines)
+    nodes = sorted(
+        (rank[r.record_seq], r.record_id, r.label, r.root_tag, r.flat_key, r.value)
+        for r in g.nodes_long.collect()
+    )
+    edges = Counter(tuple(r) for r in g.edges.collect())
+    audits = (
+        {r[0] for r in g.unused_tags.collect()},
+        {r[0] for r in g.missing_temple_codes.collect()},
+        sorted((rank[r.record_seq], r.tag, r.xref) for r in g.skipped_records.collect()),
+    )
+    lines_only = [tuple(ln[1:] for ln in sorted(rec)) for rec in records]
+    return lines_only, nodes, edges, audits
+
+
+def _with_blank_lines(text):
+    out = []
+    for i, ln in enumerate(text.split("\n")):
+        out.append(ln)
+        if i % 3 == 0:
+            out.append("" if i % 2 else "   ")
+    return "\n".join(out)
+
+
+# (file text, LF text it must read like, extra Spark confs)
+SCAN_CASES = {
+    "crlf": (DEMO_GEDCOM.replace("\n", "\r\n"), DEMO_GEDCOM, {}),
+    "lone_cr": (DEMO_GEDCOM.replace("\n", "\r"), DEMO_GEDCOM, {}),
+    "bom": ("\ufeff" + DEMO_GEDCOM, DEMO_GEDCOM, {}),
+    "blank_lines": (_with_blank_lines(DEMO_GEDCOM), DEMO_GEDCOM, {}),
+    "lines_before_first_record": (
+        "1 NOTE orphan\n2 CONT more\n\n" + DEMO_GEDCOM, DEMO_GEDCOM, {}
+    ),
+    "indented_level_0": (
+        DEMO_GEDCOM.replace("0 TRLR", "  0 @I9@ INDI\n1 SEX F\n0 TRLR"),
+        DEMO_GEDCOM.replace("0 TRLR", "  0 @I9@ INDI\n1 SEX F\n0 TRLR"),
+        {},
+    ),
+    "records_cross_splits": (
+        DEMO_GEDCOM,
+        DEMO_GEDCOM,
+        {"spark.sql.files.maxPartitionBytes": "64"},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SCAN_CASES))
+def test_file_scan_matches_in_memory_text(spark, tmp_path, case):
+    """read_gedcom_lines on a file gives the same records and the same
+    extraction as lines_from_string on the LF text."""
+    file_text, lf_text, conf = SCAN_CASES[case]
+    p = tmp_path / "case.ged"
+    p.write_bytes(file_text.encode("utf-8"))
+    with spark_conf(spark, **conf):
+        if conf:
+            assert scan_chunks(spark.read, str(p)).rdd.getNumPartitions() > 1
+        got = _snapshot(read_gedcom_lines(spark, str(p)))
+    want = _snapshot(lines_from_string(spark, lf_text))
+    assert got == want
+    assert len(got[0]) == sum(
+        1 for ln in lf_text.splitlines() if ln.lstrip().startswith("0 ")
+    )
+
+
+def test_import_plan_runs_no_python(spark, tmp_path):
+    """The import's read and extraction plans hold no Python worker
+    node: no mapInPandas, no Python UDF."""
+    p = tmp_path / "demo.ged"
+    p.write_text(DEMO_GEDCOM, encoding="utf-8")
+    g = extract_graph(assign_records(read_gedcom_lines(spark, str(p))))
+    for df in (g.nodes_long, g.edges):
+        qe = df._jdf.queryExecution()
+        plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+        for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, node

@@ -146,12 +146,6 @@ def oracle(records):
 )
 @given(st.lists(record_tree(), min_size=1, max_size=6))
 def test_extraction_matches_python_oracle(spark, records):
-    from node_gedcom_graph_spark.gedcom.extract_grouped import (
-        edges_of,
-        extract_grouped,
-        nodes_of,
-    )
-
     text = render(records)
     lines = assign_records(lines_from_string(spark, text))
     g = extract_graph(lines)
@@ -165,15 +159,3 @@ def test_extraction_matches_python_oracle(spark, records):
     want_nodes, want_edges = oracle(records)
     assert got_nodes == want_nodes
     assert got_edges == want_edges
-
-    # The grouped-map (applyInPandas) variant must agree exactly too.
-    u = extract_grouped(lines)
-    grp_nodes = sorted(
-        (r.record_seq, r.record_id, r.label, r.root_tag, r.flat_key, r.value)
-        for r in nodes_of(u).collect()
-    )
-    grp_edges = Counter(
-        (r.src, r.dst, r.rel_type, r.edge_tag) for r in edges_of(u).collect()
-    )
-    assert grp_nodes == want_nodes
-    assert grp_edges == want_edges

@@ -164,7 +164,6 @@ ALLOW: dict[str, dict[str, str]] = {
     "gedcom_graph_ancestors": {"SinglePartition": "12-line demo fixture"},
     "gedcom_graph_descendants": {"SinglePartition": "12-line demo fixture"},
     "gedcom_graph_components": {"SinglePartition": "12-line demo fixture"},
-    "gedcom_source_records": {"SinglePartition": "demo fixture source"},
     "gedcom_extract_nodes": {
         "SinglePartition": "demo fixture",
         "rangepartitioning": "deterministic fixture output order",
