@@ -30,7 +30,8 @@ import tempfile
 
 def _audit_rows(graph) -> dict[str, list[tuple]]:
     """The three audit sets, collected in one job; each value is the
-    list of the set's rows as tuples."""
+    list of the set's rows as tuples, sorted (nulls last), so that what
+    the CLI prints does not depend on partitioning."""
     from pyspark.sql import functions as F
 
     seq, text = F.lit(None).cast("long"), F.lit(None).cast("string")
@@ -43,10 +44,14 @@ def _audit_rows(graph) -> dict[str, list[tuple]]:
         .union(graph.skipped_records.select(F.lit(2), "record_seq", "tag", "xref"))
         .collect()
     )
-    return {
+    audits = {
         "unused tags": [(r.a,) for r in rows if r.k == 0],
         "missing temple codes": [(r.a,) for r in rows if r.k == 1],
         "skipped records": [(r.seq, r.a, r.b) for r in rows if r.k == 2],
+    }
+    return {
+        label: sorted(vals, key=lambda t: [(v is None, v) for v in t])
+        for label, vals in audits.items()
     }
 
 

@@ -11,9 +11,10 @@ Scan design: the text source reads with ``lineSep="\\n0 "``, so each row
 Hadoop's record reader finishes a chunk that crosses a split. The
 separator only sets the chunk size; records are decided per line. Each
 chunk is split on ``\\r\\n|\\r|\\n``, every line is parsed with
-``_LINE_RE`` (blank and unparsable lines drop), and a record starts at
-every line whose *parsed* level is 0 (an indented ``  0 @I9@ INDI``, or
-any level-0 line after a lone-CR line end, starts one inside a chunk).
+``_LINE_RE`` (blank and unparsable lines, and lines deeper than level
+99, drop), and a record starts at every line whose *parsed* level is 0
+(an indented ``  0 @I9@ INDI``, or any level-0 line after a lone-CR
+line end, starts one inside a chunk).
 Lines of a chunk before its first level-0 line belong to no record and
 drop: the lines before a file's first record, and — only in a malformed
 file whose ``0 `` line has no tag — the lines after that line up to the
@@ -52,11 +53,19 @@ _LINE_RE = "^\ufeff?" + r"\s*(\d+)(?:\s+@([^@]*)@)?\s+(\S+)(?: (.*))?$"
 _CHUNK_SEP = "\n0 "
 
 
+# GEDCOM's deepest level. A deeper line drops like a malformed one: the
+# extraction builds one column per level up to the deepest, so a single
+# line at level 2^31-1 would otherwise stall the whole import.
+_MAX_LEVEL = 99
+
+
 def _parse(line: Column) -> Column:
     """One line -> (level, xref, tag, value); level is null when the
-    line does not match (blank or malformed)."""
+    line does not match (blank or malformed) or is deeper than
+    ``_MAX_LEVEL``."""
+    level = F.regexp_extract(line, _LINE_RE, 1).try_cast("int")
     return F.struct(
-        F.regexp_extract(line, _LINE_RE, 1).try_cast("int").alias("level"),
+        F.when(level <= _MAX_LEVEL, level).alias("level"),
         F.nullif(F.regexp_extract(line, _LINE_RE, 2), F.lit("")).alias("xref"),
         F.regexp_extract(line, _LINE_RE, 3).alias("tag"),
         F.coalesce(F.regexp_extract(line, _LINE_RE, 4), F.lit("")).alias("value"),

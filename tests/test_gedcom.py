@@ -242,6 +242,22 @@ def test_deep_nesting_four_levels(spark):
     assert node_map(g, 1)["Birth Source Data Text"] == "deep"
 
 
+def test_levels_above_gedcom_max_drop(spark):
+    """GEDCOM's deepest level is 99. A deeper line drops like a malformed
+    one, so it cannot make the extraction build one column per level up
+    to it (one level-2^31-1 line would stall the import); the deepest
+    level the lines carry stays 1. A level-99 line still imports."""
+    lines = lines_from_string(
+        spark, "0 @I1@ INDI\n1 SEX M\n2147483647 NOTE x\n100 NOTE x\n0 TRLR\n"
+    )
+    assert [(r.level, r.tag) for r in lines.orderBy("line_no").collect()] == [
+        (0, "INDI"), (1, "SEX"), (0, "TRLR"),
+    ]
+    chain = "".join(f"{lvl} NOTE n{lvl}\n" for lvl in range(1, 100))
+    g = graph_of(spark, "0 @I1@ INDI\n" + chain)
+    assert node_map(g, 1)[" ".join(["Note"] * 99)] == "n99"
+
+
 def test_temp_empty_value_tracked_as_missing(spark):
     g = graph_of(spark, "0 @I1@ INDI\n1 BAPL\n2 TEMP\n")
     assert node_map(g, 1)["LDS Baptism Temple"] == ""

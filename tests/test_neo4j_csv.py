@@ -130,6 +130,32 @@ def test_cli_prints_observed_counts_and_audits(spark, tmp_path, capsys):
             tuple(r) for r in df.collect())
 
 
+def test_cli_prints_audit_lists_sorted(spark, tmp_path, capsys):
+    """Each audit list prints sorted, whatever order the rows arrive in
+    from a file read in several splits."""
+    from node_gedcom_graph_spark.__main__ import main
+
+    recs = []
+    for i in (7, 3, 9, 1, 5, 8, 2, 6, 4):
+        recs.append(f"0 @I{i}@ INDI\n1 _T{i} x\n1 BAPL\n2 TEMP Q{i}\n")
+        recs.append(f"0 @X{i}@ _REC{i}\n1 NOTE n\n")
+    src = tmp_path / "t.ged"
+    src.write_text("0 HEAD\n" + "".join(recs) + "0 TRLR\n")
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "128")
+    try:
+        rc = main(["--src", str(src), "--dest", str(tmp_path / "live"),
+                   "--master", "local[4]", "--dry-run"])
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert rc == 0
+    printed = dict(line.partition(": ")[::2]
+                   for line in capsys.readouterr().err.splitlines())
+    for label in ("unused tags", "missing temple codes", "skipped records"):
+        vals = ast.literal_eval(printed[label])
+        assert len(vals) == 9 and vals == sorted(vals), label
+
+
 @pytest.mark.parametrize("fault", ["write", "publish"])
 def test_failed_import_leaves_no_staging_dir(spark, tmp_path, monkeypatch, fault):
     from pyspark.sql import DataFrameWriter
