@@ -183,7 +183,7 @@ def bench_gedcom_pipeline(spark) -> None:
     from node_gedcom_graph_spark.gedcom.extract import extract_graph
 
     lines = synth_gedcom_lines(spark)
-    g = extract_graph(lines, max_depth=2, persist=True)
+    g = extract_graph(lines, persist=True)
     g.nodes_long.write.format("noop").mode("overwrite").save()
     g.edges.write.format("noop").mode("overwrite").save()
     g.unpersist()
@@ -296,7 +296,7 @@ def _measure(spark, qs) -> dict:
     # IMMEDIATELY after matters because the JVM CodeGenerator class
     # cache is a fixed 100 entries — a warm-all-then-time-all loop
     # evicts the large generated classes (the 64-min MinHash aggregate,
-    # the GEDCOM window stack) before their timed runs, re-measuring
+    # the GEDCOM extraction) before their timed runs, re-measuring
     # ~2s of janino compilation that a sustained deployment never pays.
     # Timing is adaptive min-of-N (_timed_best): a single-shot timing is
     # exposed to GC pauses and hypervisor steal (observed 2-5x swings on

@@ -31,9 +31,8 @@ Python worker, so ``record_seq`` is:
   start at ``partition_index << 33``;
 - what the CLI's ``skipped records`` audit prints.
 
-``line_no`` is unique across the whole input (the EVEN-promotion join in
-``extract.py`` keys on it alone) and increasing in file order within a
-record.
+``line_no`` is unique across the whole input and increasing in file
+order within a record (``extract.py`` sorts each record's lines by it).
 """
 
 from __future__ import annotations
@@ -53,9 +52,9 @@ _LINE_RE = "^\ufeff?" + r"\s*(\d+)(?:\s+@([^@]*)@)?\s+(\S+)(?: (.*))?$"
 _CHUNK_SEP = "\n0 "
 
 
-# GEDCOM's deepest level. A deeper line drops like a malformed one: the
-# extraction builds one column per level up to the deepest, so a single
-# line at level 2^31-1 would otherwise stall the whole import.
+# GEDCOM's deepest level (the 5.5.1 grammar caps levels at 99). A deeper
+# line is not GEDCOM and drops like a malformed one; the extraction's
+# per-record work grows with the record's deepest level.
 _MAX_LEVEL = 99
 
 

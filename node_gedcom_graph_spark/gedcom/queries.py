@@ -34,7 +34,7 @@ def _session_key(spark: SparkSession) -> str:
 def _synth_graph(spark: SparkSession, kind: str, n: int) -> GedcomGraph:
     """Synthetic-scale extraction, built once per (session, generator,
     n): repeated registry sweeps (driver gate, plan audit, bench) would
-    otherwise persist a fresh enriched frame per invocation — the same
+    otherwise persist a fresh per-record frame per invocation — the same
     unbounded-accumulation hazard the Q15 revenue cache avoids."""
     from node_gedcom_graph_spark.gedcom.fixtures import (
         synth_gedcom_fam_lines,
@@ -46,7 +46,7 @@ def _synth_graph(spark: SparkSession, kind: str, n: int) -> GedcomGraph:
     if cached is not None:
         return cached
     gen = synth_gedcom_lines if kind == "indi" else synth_gedcom_fam_lines
-    g = extract_graph(gen(spark, n), max_depth=2, persist=True)
+    g = extract_graph(gen(spark, n), persist=True)
     _SYNTH_GRAPH_CACHE[key] = g
     return g
 
@@ -54,9 +54,9 @@ def _synth_graph(spark: SparkSession, kind: str, n: int) -> GedcomGraph:
 def _demo_graph(spark: SparkSession) -> GedcomGraph:
     """Demo extraction, built once per SparkSession — four registered
     queries read different outputs of the same DAG; the memoized
-    enriched frame is persisted (extract_graph(persist=True)) so each
-    output materializes from the cached per-line frame instead of
-    re-running parse + windows."""
+    per-record frame is persisted (extract_graph(persist=True)) so each
+    output materializes from the cached frame instead of re-running
+    parse + extraction."""
     key = _session_key(spark)
     cached = _DEMO_GRAPH_CACHE.get(key)
     if cached is not None:
@@ -211,11 +211,11 @@ def gedcom_synth_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     birth years, 2 birth places (Springfield vs the decoded SLAKE
     temple — exercising the conditional PLAC decode at scale), and the
     id%10000 family pointer fan-in. The demo-fixture queries pin the
-    per-row semantics; this pins that the windows/explodes/joins
+    per-row semantics; this pins that the record grouping and explodes
     preserve them across a shuffled, multi-partition run.
 
-    Scale: extraction as in bench.py (one record_seq shuffle, collapsed
-    window stack); the stats are two grouped aggregates over the long
+    Scale: extraction as in bench.py (one record_seq shuffle, then
+    per-record arrays); the stats are two grouped aggregates over the long
     table — map-side partials, distinct counts keyed by (key, value).
     """
     g = _synth_graph(spark, "indi", 5000)

@@ -16,6 +16,7 @@ from node_gedcom_graph_spark.gedcom.parser import (
     read_gedcom_lines,
     scan_chunks,
 )
+from tests.test_gedcom_property import oracle, render
 
 
 def graph_of(spark, text, **kw):
@@ -258,6 +259,62 @@ def test_levels_above_gedcom_max_drop(spark):
     assert node_map(g, 1)[" ".join(["Note"] * 99)] == "n99"
 
 
+def _assert_matches_oracle(spark, records):
+    g = graph_of(spark, render(records))
+    got_nodes = sorted(
+        (r.record_seq, r.record_id, r.label, r.root_tag, r.flat_key, r.value)
+        for r in g.nodes_long.collect()
+    )
+    got_edges = Counter((r.src, r.dst, r.rel_type, r.edge_tag) for r in g.edges.collect())
+    assert (got_nodes, got_edges) == oracle(records)
+
+
+def _node(tag, value="", children=(), xref=None):
+    return {"tag": tag, "value": value, "xref": xref, "children": list(children)}
+
+
+def test_level_99_chain_matches_oracle(spark):
+    """One record chaining down to level 99, with an EVEN/TYPE pair and
+    a pointer near the bottom, extracts as the oracle's tree walk does."""
+    bottom = _node(
+        "EVEN",
+        children=[
+            _node("TYPE", "Census"),
+            _node("DATE", "1 JAN 1900", [_node("SOUR", "@S1@")]),
+            _node("NOTE", "deepest"),
+        ],
+    )  # levels 97-99
+    node = bottom
+    for lvl in range(96, 0, -1):
+        node = _node("NOTE", f"n{lvl}", [node])
+    records = [_node("INDI", children=[node, _node("SEX", "F")], xref="I1"),
+               _node("SOUR", children=[_node("TITL", "t")], xref="S1")]
+    assert max(int(ln.split()[0]) for ln in render(records).splitlines()) == 99
+    _assert_matches_oracle(spark, records)
+
+
+def test_record_of_thousands_of_lines_matches_oracle(spark):
+    """One record of a few thousand CONT lines (the last one wins its
+    key), with structure and pointers around them, extracts as the
+    oracle's tree walk does."""
+    conts = [_node("CONT", f"line {k}") for k in range(3000)]
+    records = [
+        _node(
+            "INDI",
+            xref="I1",
+            children=[
+                _node("NAME", "Ann /Lee/"),
+                _node("NOTE", "start", conts),
+                _node("EVEN", children=[_node("TYPE", "Grad"), _node("DATE", "D")]),
+                _node("_NOPE", "x", [_node("DATE", "hidden")]),
+                _node("FAMS", "@F1@"),
+            ],
+        ),
+        _node("FAM", xref="F1", children=[_node("HUSB", "@I1@")]),
+    ]
+    _assert_matches_oracle(spark, records)
+
+
 def test_temp_empty_value_tracked_as_missing(spark):
     g = graph_of(spark, "0 @I1@ INDI\n1 BAPL\n2 TEMP\n")
     assert node_map(g, 1)["LDS Baptism Temple"] == ""
@@ -476,3 +533,45 @@ def test_import_plan_runs_no_python(spark, tmp_path):
         plan = qe.optimizedPlan().toString() + qe.executedPlan().toString()
         for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, node
+
+
+def test_import_plan_has_no_window_or_join(spark, tmp_path):
+    """Extraction groups each record's lines once: the nodes and edges
+    plans of a scanned file hold no Window, no join and one hash
+    shuffle at most."""
+    p = tmp_path / "demo.ged"
+    p.write_text(DEMO_GEDCOM, encoding="utf-8")
+    g = extract_graph(read_gedcom_lines(spark, str(p)))
+    for df in (g.nodes_long, g.edges):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+        assert "Join" not in plan
+        assert plan.count("Exchange hashpartitioning") <= 1
+
+
+def test_persisted_extraction_outlives_its_source(spark, tmp_path):
+    """With persist=True every output, the skipped-records audit too,
+    reads the one cached frame: once nodes_long has run, the .ged file
+    is not read again."""
+    text = DEMO_GEDCOM + "0 @Z1@ _ZZZ\n1 NOTE skipped\n"
+    p = tmp_path / "gone.ged"
+    p.write_text(text, encoding="utf-8")
+
+    def outputs(g):
+        return (
+            Counter(tuple(r) for r in g.edges.collect()),
+            {r.tag for r in g.unused_tags.collect()},
+            {r.code for r in g.missing_temple_codes.collect()},
+            sorted(tuple(r) for r in g.skipped_records.collect()),
+        )
+
+    g = extract_graph(read_gedcom_lines(spark, str(p)), persist=True)
+    try:
+        g.nodes_long.collect()
+        p.unlink()
+        got = outputs(g)
+    finally:
+        g.unpersist()
+    want = outputs(extract_graph(lines_from_string(spark, text)))
+    assert got == want
+    assert len(want[3]) == 2  # FOO and _ZZZ

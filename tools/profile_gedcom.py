@@ -50,7 +50,7 @@ def one_iteration(spark, n_records: int) -> dict:
     t0 = time.monotonic()
     lines = synth_gedcom_lines(spark, n_records)
     t1 = time.monotonic()
-    g = extract_graph(lines, max_depth=2, persist=True)
+    g = extract_graph(lines, persist=True)
     t2 = time.monotonic()
     g.nodes_long.write.format("noop").mode("overwrite").save()
     t3 = time.monotonic()
