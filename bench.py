@@ -222,18 +222,21 @@ def _measure_scaled(spark, qs) -> dict | None:
     if os.path.basename(SF_DIR.rstrip("/")) != "sf0.1":
         return None  # synthesis ratios documented for the sf0.1 tier
     repo = os.path.dirname(os.path.abspath(__file__))
-    scaled_dir = os.environ.get("NGG_BENCH_SCALED_DIR") or os.path.join(
-        repo, ".benchdata", "sf1"
-    )
+    own_dir = os.path.join(repo, ".benchdata", "sf1")
+    scaled_dir = os.environ.get("NGG_BENCH_SCALED_DIR") or own_dir
     sentinel = os.path.join(scaled_dir, "_SYNTH_OK")
     try:
         if not os.path.exists(sentinel):
             import shutil
             import subprocess
 
-            # A dir without the sentinel is an interrupted synthesis —
-            # wipe and rebuild rather than bench against partial tables.
-            shutil.rmtree(scaled_dir, ignore_errors=True)
+            if scaled_dir == own_dir:
+                # Our own dir without the sentinel is an interrupted
+                # synthesis: wipe and rebuild rather than bench against
+                # partial tables.
+                shutil.rmtree(scaled_dir, ignore_errors=True)
+            elif os.path.isdir(scaled_dir) and os.listdir(scaled_dir):
+                return None  # a user's directory is never wiped
             if shutil.disk_usage("/").free < 2 * (1 << 30):
                 return None
             subprocess.run(

@@ -92,7 +92,7 @@ def main(argv: list[str] | None = None) -> int:
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="gedcom-import", master=args.master)
-    stdin_tmp = None
+    stdin_tmp = graph = None
     try:
         src = args.src
         if src == "-":
@@ -138,7 +138,6 @@ def main(argv: list[str] | None = None) -> int:
                     + (f" (backup: {backup})" if backup else ""),
                     file=sys.stderr,
                 )
-                graph.unpersist()
                 return 0
             if args.dry_run:
                 final_outputs = outputs
@@ -160,9 +159,10 @@ def main(argv: list[str] | None = None) -> int:
         print(" ".join([f"{args.bindir}/neo4j-admin", "database", "import", "full"]
                        + build_import_args(final_outputs,
                                            into=args.dest if not args.dry_run else staging)))
-        graph.unpersist()
         return 0
     finally:
+        if graph is not None:
+            graph.unpersist()
         if stdin_tmp is not None:
             import os as _os
 

@@ -35,9 +35,11 @@ Plan: what a line says on its own (friendly tag, transformed property
 values, temple miss) is computed per line in whole-stage codegen before
 the shuffle. What depends on the line's place in its tree is computed
 per record array: each line's ancestor at every level above it, the
-EVEN promotion, the key prefix, and last-wins keys. All five outputs
-read that one per-record frame, so ``persist=True`` caches the only
-copy any of them needs.
+EVEN promotion, the key prefix, and last-wins keys. ``nodes`` is that
+frame's row of each record that emits a node, its key-sorted properties
+one array that publish reads with no regrouping; every output reads the
+one per-record frame, so ``persist=True`` caches the only copy any of
+them needs.
 
 Scale: the shuffle moves each line once. Per-record work is about
 linear in the record's lines times its own deepest level (at most 99),
@@ -67,7 +69,8 @@ from node_gedcom_graph_spark.functions.dictionaries import (
 class GedcomGraph:
     """Extraction output: the property graph + the two audit sets."""
 
-    nodes_long: DataFrame  # record_seq, record_id, label, root_tag, flat_key, value
+    nodes: DataFrame  # record_seq, record_id, label, root_tag, props: one row per node
+    nodes_long: DataFrame  # nodes with props inlined: ..., flat_key, value
     edges: DataFrame  # src, dst, rel_type, edge_tag
     unused_tags: DataFrame  # tag
     missing_temple_codes: DataFrame  # code
@@ -80,13 +83,13 @@ class GedcomGraph:
 
     def nodes_wide(self, root_tag: str) -> DataFrame:
         """Per-label wide table (the reference's nodes-<TAG>.csv shape):
-        one row per record, one column per flat key."""
-        sub = self.nodes_long.filter(F.col("root_tag") == root_tag)
-        keys = [r[0] for r in sub.select("flat_key").distinct().collect()]
-        return (
-            sub.groupBy("record_seq", "record_id", "label")
-            .pivot("flat_key", sorted(keys))
-            .agg(F.first("value"))
+        one row per node, one column per flat key, null where it lacks
+        the key."""
+        sub = self.nodes.filter(F.col("root_tag") == root_tag)
+        keys = sub.select(F.explode("props.flat_key")).distinct().collect()
+        ids = ["record_seq", "record_id", "label"]
+        return sub.select(*ids, F.map_from_entries("props").alias("m")).select(
+            *ids, *[F.try_element_at("m", F.lit(k)).alias(k) for k, in sorted(keys)]
         )
 
 
@@ -313,8 +316,8 @@ def extract_graph(lines: DataFrame, persist: bool = False) -> GedcomGraph:
     """Run the full extraction over a lines IR that already carries
     ``record_seq`` (see parser: the scan numbers records).
 
-    ``persist``: cache the per-record frame (MEMORY_AND_DISK) that all
-    five outputs read. Set this when materializing more than one output
+    ``persist``: cache the per-record frame (MEMORY_AND_DISK) that every
+    output reads. Set this when materializing more than one output
     in the same job — the standard multi-sink fan-out pattern — so the
     scan, parse and extraction run once instead of once per sink. Call
     ``.unpersist()`` on the result when done.
@@ -339,8 +342,12 @@ def extract_graph(lines: DataFrame, persist: bool = False) -> GedcomGraph:
     if persist:
         frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
 
-    nodes_long = frame.select(
-        "record_seq", "record_id", "label", "root_tag", F.inline("out.props")
+    # A node is a record with >= 1 property (csv_writer.js:182-185).
+    nodes = frame.filter(F.size("out.props") > 0).select(
+        "record_seq", "record_id", "label", "root_tag", F.col("out.props").alias("props")
+    )
+    nodes_long = nodes.select(
+        "record_seq", "record_id", "label", "root_tag", F.inline("props")
     )
     edges = frame.select(F.inline("out.edges"))
     unused_tags = frame.select(F.explode("out.unused").alias("tag")).distinct()
@@ -354,6 +361,7 @@ def extract_graph(lines: DataFrame, persist: bool = False) -> GedcomGraph:
     )
 
     return GedcomGraph(
+        nodes,
         nodes_long,
         edges,
         unused_tags,

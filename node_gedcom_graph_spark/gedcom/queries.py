@@ -170,10 +170,9 @@ def gedcom_skipped_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def gedcom_nodes_wide_indi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's nodes-INDI.csv wide shape (op 13/18): one row per
-    Individual record, one column per flat key — via groupBy().pivot()
-    with an explicit key list (no second pass at scale when the key
-    vocabulary is supplied). Projected to three stable keys for the
-    golden oracle."""
+    Individual node, one column per flat key, each looked up in the
+    record's own property array (no groupBy, no pivot). Projected to
+    three stable keys for the golden oracle."""
     from pyspark.sql import functions as F
 
     wide = _demo_graph(spark).nodes_wide("INDI")

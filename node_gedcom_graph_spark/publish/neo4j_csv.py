@@ -19,9 +19,11 @@ Re-expresses the reference's sink + publish machinery:
   swap/restore driven by real exit codes — the reference's
   import->stop->swap->start state machine (neo4j.js:84-109 / op 20).
 
-Cost: like the reference's single pass over the records, every group
+Cost: as the reference writes each node's row from the record it has
+just flattened (csv_writer.js:182-185), each node line comes from its
+record's one ``GedcomGraph.nodes`` row, with no regroup. Every group
 comes from ONE partitioned write, after one small job that collects
-each group's column list. The observed row counts ride that write.
+each group's column list; the observed row counts ride that write.
 Scale: a group is one file (neo4j-admin reads a group's files as one
 logical file with the header on the first line only), so each group is
 written by one task; groups are written in parallel.
@@ -35,7 +37,6 @@ import shutil
 import tempfile
 import uuid
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -65,15 +66,25 @@ def _csv_field_expr(c: Column) -> Column:
     )
 
 
-def _count_aggs() -> list[Column]:
-    """Row counts over a frame whose node rows carry ``_props`` (property
-    rows they stand for) and ``record_id``, and whose edge rows carry
-    ``_edge``."""
-    return [
-        F.coalesce(F.sum("_props"), F.lit(0)).alias("n_property_rows"),
-        F.approx_count_distinct("record_id").alias("n_records_approx"),
-        F.count("_edge").alias("n_edges"),
-    ]
+def _counted_rows(
+    graph: GedcomGraph, obs: Observation, node_cols=(), edge_cols=()
+) -> DataFrame:
+    """One row per node (``node_cols`` of ``graph.nodes``) and per edge
+    (``edge_cols`` of ``graph.edges``), observed by ``obs``: a node
+    counts its record id and its ``size(props)`` property rows."""
+    return (
+        graph.nodes.select(*node_cols, F.size("props").alias("_props"), "record_id")
+        .unionByName(
+            graph.edges.select(*edge_cols, F.lit(1).alias("_edge")),
+            allowMissingColumns=True,
+        )
+        .observe(
+            obs,
+            F.coalesce(F.sum("_props"), F.lit(0)).alias("n_property_rows"),
+            F.approx_count_distinct("record_id").alias("n_records_approx"),
+            F.count("_edge").alias("n_edges"),
+        )
+    )
 
 
 def export_neo4j_csvs(graph: GedcomGraph, out_dir: str) -> dict[str, str]:
@@ -87,34 +98,20 @@ def export_with_counts(
 ) -> tuple[dict[str, str], dict[str, int]]:
     """``export_neo4j_csvs`` plus the ``observed_counts`` numbers, taken
     by ``df.observe`` on the write itself. A group directory left from
-    an earlier export into ``out_dir`` is replaced."""
-    nodes, edges = graph.nodes_long, graph.edges
-    mine = [
-        df for df in (nodes, edges)
-        if not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    ]
-    for df in mine:
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return _export(nodes, edges, out_dir)
-    finally:
-        for df in mine:
-            df.unpersist()
+    an earlier export into ``out_dir`` is replaced.
 
-
-def _export(
-    nodes: DataFrame, edges: DataFrame, out_dir: str
-) -> tuple[dict[str, str], dict[str, int]]:
-    spark = nodes.sparkSession
+    It reads the graph twice (column lists, then the write) and caches
+    nothing: extract with ``persist=True``, or pay the extraction twice."""
+    spark = graph.nodes.sparkSession
     os.makedirs(out_dir, exist_ok=True)
 
     # Every group's columns in one job; an edge group's key is NULL.
     node_keys: dict[str, list[str]] = {}
     edge_tags: set[str] = set()
     for tag, key in (
-        nodes.select(F.col("root_tag").alias("tag"), "flat_key")
+        graph.nodes_long.select(F.col("root_tag").alias("tag"), "flat_key")
         .unionByName(
-            edges.select(
+            graph.edges.select(
                 F.col("edge_tag").alias("tag"),
                 F.lit(None).cast("string").alias("flat_key"),
             )
@@ -147,41 +144,32 @@ def _export(
             + ")"
         )
 
-    # One line per record: its properties in the group's column order
-    # (missing ones empty), then :LABEL.
+    # One line per node: its properties in the group's column order
+    # (missing ones empty), then :LABEL. Its {key: CSV field} map is bound
+    # once as an aggregate's finish argument: a projected column would be
+    # inlined into the lambda and rebuilt for every column.
     cols = tag_map({
         t: "array(" + ", ".join(sql_string(c) for c in cs) + ")"
         for t, cs in node_cols.items()
     })
     node_gid = tag_map({t: str(gid[f"nodes-{t}"]) for t in node_cols})
-    node_lines = (
-        nodes.groupBy("root_tag", "record_seq", "record_id", "label")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("flat_key", "value")))
-            .alias("props"),
-            F.count(F.lit(1)).alias("_props"),
-        )
-        .select(
-            F.element_at(node_gid, F.col("root_tag")).alias("gid"),
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.element_at(cols, F.col("root_tag")),
-                    lambda k: _csv_field_expr(F.try_element_at(F.col("props"), k)),
-                ),
-                _csv_field_expr(F.col("label")),
-            ).alias("line"),
-            "_props",
-            "record_id",
-        )
+    fields = F.map_from_entries(
+        F.transform("props", lambda p: F.struct(p.flat_key, _csv_field_expr(p.value)))
+    )
+    node_line = F.aggregate(
+        F.array(), fields, lambda acc, _: acc,
+        lambda m: F.concat_ws(
+            ",",
+            F.transform(
+                F.element_at(cols, F.col("root_tag")),
+                lambda k: F.coalesce(F.try_element_at(m, k), F.lit("")),
+            ),
+            _csv_field_expr(F.col("label")),
+        ),
     )
     edge_gid = tag_map({t: str(gid[f"relationships-{t}"]) for t in edge_tags})
-    edge_lines = edges.select(
-        F.element_at(edge_gid, F.col("edge_tag")).alias("gid"),
-        F.concat_ws(
-            ",", *[_csv_field_expr(F.col(c)) for c in ("src", "dst", "rel_type")]
-        ).alias("line"),
-        F.lit(1).alias("_edge"),
+    edge_line = F.concat_ws(
+        ",", *[_csv_field_expr(F.col(c)) for c in ("src", "dst", "rel_type")]
     )
     # A SQL VALUES relation, not createDataFrame: a local Python list
     # would make the write start a Python worker to unpickle it.
@@ -193,9 +181,15 @@ def _export(
 
     obs = Observation("neo4j_csv_counts")
     lines = (
-        node_lines.unionByName(edge_lines, allowMissingColumns=True)
+        _counted_rows(
+            graph,
+            obs,
+            (F.element_at(node_gid, F.col("root_tag")).alias("gid"),
+             node_line.alias("line")),
+            (F.element_at(edge_gid, F.col("edge_tag")).alias("gid"),
+             edge_line.alias("line")),
+        )
         .unionByName(header_lines, allowMissingColumns=True)
-        .observe(obs, *_count_aggs())
         # One task per group, header first: one file per group.
         .repartition("gid")
         .sortWithinPartitions("gid", F.col("_header").isNull())
@@ -321,16 +315,9 @@ def observed_counts(graph: GedcomGraph) -> dict[str, int]:
     """Row-level pipeline metrics via ``df.observe`` (SURVEY op 26: the
     reference's read/write/skip event counters, re-expressed as
     accumulator-backed observations). Standalone, this runs one job, a
-    noop write over ``nodes_long`` and ``edges``; ``export_with_counts``
-    gets the same numbers from the CSV write with no extra job.
+    noop write over the node and edge rows; ``export_with_counts`` gets
+    the same numbers from the CSV write with no extra job.
     """
     obs = Observation("graph_counts")
-    (
-        graph.nodes_long.select(F.lit(1).alias("_props"), "record_id")
-        .unionByName(
-            graph.edges.select(F.lit(1).alias("_edge")), allowMissingColumns=True
-        )
-        .observe(obs, *_count_aggs())
-        .write.format("noop").mode("overwrite").save()
-    )
+    _counted_rows(graph, obs).write.format("noop").mode("overwrite").save()
     return obs.get

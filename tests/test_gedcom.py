@@ -334,6 +334,17 @@ def test_nodes_wide_shape(spark):
     row = {r["record_id"]: r for r in wide.collect()}
     assert row["I1"]["Birth Date"] == "1 JAN 1900"
     assert row["I3"]["Surname"] == "Jones"
+    # Every column against nodes_long: a key a record lacks reads null,
+    # and a record with no properties has no row.
+    long = {}
+    for r in g.nodes_long.filter(F.col("root_tag") == "INDI").collect():
+        long.setdefault((r.record_seq, r.record_id, r.label), {})[r.flat_key] = r.value
+    keys = sorted({k for props in long.values() for k in props})
+    assert wide.columns == ["record_seq", "record_id", "label"] + keys
+    assert {tuple(r[:3]): dict(zip(keys, r[3:])) for r in wide.collect()} == {
+        rec: {k: props.get(k) for k in keys} for rec, props in long.items()
+    }
+    assert g.nodes_wide("TRLR").count() == 0  # the trailer has no property
 
 
 def test_read_gedcom_directory_multi_file(spark, tmp_path):

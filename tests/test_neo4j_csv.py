@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 from node_gedcom_graph_spark.gedcom.extract import extract_graph
 from node_gedcom_graph_spark.gedcom.fixtures import DEMO_GEDCOM
 from node_gedcom_graph_spark.gedcom.parser import assign_records, lines_from_string
-from node_gedcom_graph_spark.publish.neo4j_csv import csv_field, export_neo4j_csvs
+from node_gedcom_graph_spark.publish.neo4j_csv import (
+    csv_field,
+    export_neo4j_csvs,
+    export_with_counts,
+)
 
 # Quotes, commas and non-ASCII text in values, and a comma in an EVEN
 # TYPE, which becomes part of the column names of its record's group.
@@ -172,8 +176,60 @@ def test_failed_import_leaves_no_staging_dir(spark, tmp_path, monkeypatch, fault
         monkeypatch.setattr(neo4j_csv, "atomic_publish", boom)
     src = tmp_path / "t.ged"
     src.write_text(DEMO_GEDCOM)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(OSError, match="injected"):
         main(["--src", str(src), "--dest", str(tmp_path / "live"),
               "--master", "local[4]"])
     assert not glob.glob(str(tmp_path / "ged2neo-csvs-*"))
     assert not os.path.exists(tmp_path / "live")
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
+
+def test_export_caches_nothing_of_its_own(spark, tmp_path, monkeypatch):
+    """A persisted extraction is the one cache of an import: the export
+    reads it and persists nothing more."""
+    g = extract_graph(
+        assign_records(lines_from_string(spark, DEMO_GEDCOM, n_partitions=2)),
+        persist=True,
+    )
+    calls = []
+    cls = type(g.edges)
+    for name in ("persist", "cache"):
+        def spy(self, *args, _orig=getattr(cls, name), **kwargs):
+            calls.append(self)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, spy)
+    try:
+        export_with_counts(g, str(tmp_path / "stage"))
+    finally:
+        g.unpersist()
+    assert calls == []
+
+
+def test_write_and_wide_plans_hold_only_the_record_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """The CSV write and the wide table read each record's row as
+    extraction left it: the only aggregate in their plans is
+    extraction's per-record collect_list of its lines."""
+    from pyspark.sql import DataFrameWriter
+
+    g = _graph(spark, TRICKY_GEDCOM)
+    plans = []
+    text = DataFrameWriter.text
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return text(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "text", spy)
+    export_neo4j_csvs(g, str(tmp_path / "stage"))
+    plans.append(g.nodes_wide("INDI")._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) == 2
+    for plan in plans:
+        aggregates = [ln for ln in plan.splitlines() if "Aggregate" in ln]
+        assert aggregates, plan
+        for ln in aggregates:
+            assert "collect_list(l#" in ln, ln
+        assert "first(" not in plan
