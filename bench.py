@@ -216,6 +216,15 @@ SCALED_QUERIES = (
 )
 
 
+def _existing_ancestor(path: str) -> str:
+    """``path`` or its nearest ancestor that exists: the directory whose
+    filesystem a synthesis into ``path`` would fill."""
+    path = os.path.abspath(path)
+    while not os.path.exists(path):
+        path = os.path.dirname(path)
+    return path
+
+
 def _measure_scaled(spark, qs) -> dict | None:
     if os.environ.get("NGG_BENCH_SCALED", "1") == "0":
         return None
@@ -237,7 +246,7 @@ def _measure_scaled(spark, qs) -> dict | None:
                 shutil.rmtree(scaled_dir, ignore_errors=True)
             elif os.path.isdir(scaled_dir) and os.listdir(scaled_dir):
                 return None  # a user's directory is never wiped
-            if shutil.disk_usage("/").free < 2 * (1 << 30):
+            if shutil.disk_usage(_existing_ancestor(scaled_dir)).free < 2 * (1 << 30):
                 return None
             subprocess.run(
                 [

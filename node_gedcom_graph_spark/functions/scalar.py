@@ -76,6 +76,36 @@ def surname(name: Column) -> Column:
 
 # --- text helpers shared by the dedup / text-analysis operators -----------
 
+# Case fold for expressions that keep only ASCII alphanumerics. Spark's
+# lower() uses ICU case mappings by default, and the first lower() a JVM
+# evaluates initializes CollationAwareUTF8String, which builds a
+# title-case table through ICU for every code point: 2-3 s on a fresh
+# driver (C1 JIT, 4 vCPU), while every other task of the stage waits on
+# the class-init monitor. That stall sat inside the first MinHash pass
+# of a session. The fold is exact for its callers, which keep only
+# [a-z0-9] or count what remains after [a-z0-9\s] is removed. Over every
+# code point (Unicode 14 tables), only A-Z, U+0130 (lowercase i + U+0307)
+# and U+212A (Kelvin sign, lowercase k) have a full lowercase that holds
+# an ASCII letter or digit; U+0130 is the one code point whose lowercase
+# is longer than itself; every other code point lowercases to one code
+# point outside [a-z0-9\s]. Setting spark.sql.icu.caseMappings.enabled
+# to false instead would change every user's lower()/upper() engine-wide
+# and send non-ASCII text through the JVM's default locale.
+_FOLD_FROM = "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212a"
+_FOLD_TO = "abcdefghijklmnopqrstuvwxyzk"
+
+
+def ascii_fold(text: Column) -> Column:
+    """``lower(text)`` as far as ``[a-z0-9\\s]`` can tell, without ICU."""
+    dotted_i = F.replace(text, F.lit("\u0130"), F.lit("i\u0307"))
+    return F.translate(dotted_i, _FOLD_FROM, _FOLD_TO)
+
+
+def punct_chars(text: Column) -> Column:
+    """Characters of ``text`` that are neither alphanumeric (case-folded
+    to ASCII) nor whitespace; the numerator of the punctuation ratio."""
+    return F.length(F.regexp_replace(ascii_fold(text), r"[a-z0-9\s]", ""))
+
 
 def normalize_text(text: Column) -> Column:
     """Lowercase, strip non-alphanumerics to spaces, collapse whitespace.
@@ -84,14 +114,13 @@ def normalize_text(text: Column) -> Column:
     whose semantics agree between Java regex (Spark) and RE2 (DuckDB
     oracle): character classes and simple quantifiers only.
     """
-    lowered = F.lower(text)
-    stripped = F.regexp_replace(lowered, "[^a-z0-9]+", " ")
+    stripped = F.regexp_replace(ascii_fold(text), "[^a-z0-9]+", " ")
     return F.trim(stripped)
 
 
 def tokens(text: Column) -> Column:
     """Alphanumeric tokens (lowercased) as array<string>."""
-    return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
+    return F.regexp_extract_all(ascii_fold(text), F.lit("[a-z0-9]+"), 0)
 
 
 def md5_bucket(col: Column, n_buckets: int) -> Column:

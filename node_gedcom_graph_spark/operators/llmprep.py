@@ -340,7 +340,11 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 
 
 def redact_pii(text: Column) -> Column:
-    """Chain of global regexp_replaces; each hit becomes ``[PII]``."""
+    """Chain of global regexp_replaces; each hit becomes ``[PII]``.
+
+    The output is the lowered text, so this keeps ICU ``lower()`` rather
+    than ``functions.scalar.ascii_fold`` and pays its one-time class
+    initialization (about 3 s) on the first call in a JVM."""
     out = F.lower(text)
     for _name, pat in PII_PATTERNS:
         out = F.regexp_replace(out, pat, "[PII]")

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from node_gedcom_graph_spark.functions.scalar import tokens
+from node_gedcom_graph_spark.functions.scalar import punct_chars, tokens
 from node_gedcom_graph_spark.operators import register
 from node_gedcom_graph_spark.operators.textstats import STOPWORDS, _sql_list
 from node_gedcom_graph_spark.sources.tables import load_table
@@ -133,9 +133,7 @@ def text_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))).alias(
             "stop_hits"
         ),
-        F.length(F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", "")).alias(
-            "n_symbols"
-        ),
+        punct_chars(F.col("text")).alias("n_symbols"),
     ).filter(F.col("n_words") > 0)
     m = base.select(
         "doc_id",

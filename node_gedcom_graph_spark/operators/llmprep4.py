@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from node_gedcom_graph_spark.functions.scalar import md5_bucket, tokens
+from node_gedcom_graph_spark.functions.scalar import md5_bucket, punct_chars, tokens
 from node_gedcom_graph_spark.operators import persist_tracked, register
 from node_gedcom_graph_spark.operators.dedup import (
     DECON_BENCH_SOURCE,
@@ -1490,12 +1490,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("w").cast("bigint").alias("logit_sum"),
         )
     )
-    punct = (
-        F.length(F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", "")).cast(
-            "double"
-        )
-        / F.length("text")
-    )
+    punct = punct_chars(F.col("text")).cast("double") / F.length("text")
     # LEFT join + coalesce: a non-empty document with zero alphanumeric
     # tokens (punctuation-only) produces no explode rows, so an inner
     # join would drop it from the funnel entirely while the oracle's

@@ -14,7 +14,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from node_gedcom_graph_spark.functions.scalar import normalize_text, tokens
+from node_gedcom_graph_spark.functions.scalar import (
+    ascii_fold,
+    normalize_text,
+    punct_chars,
+    tokens,
+)
 from node_gedcom_graph_spark.operators import register
 from node_gedcom_graph_spark.sources.tables import load_table
 
@@ -156,7 +161,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.filter(toks, lambda x: F.array_contains(_stop_arr("en"), x))
     )
     n_chars = F.length("text")
-    n_punct = F.length(F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", ""))
+    n_punct = punct_chars(F.col("text"))
     return (
         docs.select(
             "doc_id",
@@ -306,12 +311,9 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "text",
         F.size(tokens(F.col("text"))).alias("n_tokens"),
-        (
-            F.length(F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", "")).cast(
-                "double"
-            )
-            / F.length("text")
-        ).alias("punct_ratio"),
+        (punct_chars(F.col("text")).cast("double") / F.length("text")).alias(
+            "punct_ratio"
+        ),
     )
     filtered = q.filter((F.col("n_tokens") >= 10) & (F.col("punct_ratio") <= 0.1))
     deduped = filtered.groupBy(F.md5("text").alias("fp")).agg(
@@ -423,7 +425,7 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.size(toks).cast("double") / F.length("text")).alias("w"),
     ).filter(F.size(toks) > 0)
     threshold = F.lpad(
-        F.lower(
+        ascii_fold(
             F.hex(F.floor(F.least(F.col("w"), F.lit(0.999999)) * 16777216).cast("bigint"))
         ),
         6,

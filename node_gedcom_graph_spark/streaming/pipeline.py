@@ -2137,6 +2137,7 @@ def stream_dedup_substring_windows(
     (windows older than the horizon age out — the Lee et al. 2022
     pipeline dedups within a crawl snapshot, not across all time).
     """
+    from node_gedcom_graph_spark.functions.scalar import ascii_fold
     from node_gedcom_graph_spark.operators.dedup import SUBSTR_W
 
     docs = read_documents_stream(spark, sf_dir)
@@ -2171,7 +2172,7 @@ def stream_dedup_substring_windows(
         )
         .filter(F.col("n_occurrences") >= 2)
         .select(
-            F.lower(F.hex("wk")).alias("window_md5"),
+            ascii_fold(F.hex("wk")).alias("window_md5"),
             F.col("k.doc_id").alias("first_doc"),
             F.col("k.p").alias("first_p"),
             "n_occurrences",
@@ -2314,7 +2315,11 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    from node_gedcom_graph_spark.functions.scalar import md5_bucket, tokens
+    from node_gedcom_graph_spark.functions.scalar import (
+        md5_bucket,
+        punct_chars,
+        tokens,
+    )
     from node_gedcom_graph_spark.operators.dedup import (
         DECON_BENCH_SOURCE,
         shingled_docs,
@@ -2381,12 +2386,9 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.md5("text").alias("fp"),
-        (
-            F.length(
-                F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", "")
-            ).cast("double")
-            / F.length("text")
-        ).alias("punct_ratio"),
+        (punct_chars(F.col("text")).cast("double") / F.length("text")).alias(
+            "punct_ratio"
+        ),
         tokens(F.col("text")).alias("toks"),
     )
     w_of = lambda t: (  # noqa: E731 — inline weight expression

@@ -2,11 +2,21 @@
 controlled inputs (the driver corpus has no true duplicates, so these
 inject them)."""
 
+import string
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from node_gedcom_graph_spark.functions.scalar import (
+    normalize_text,
+    punct_chars,
+    tokens,
+)
 from node_gedcom_graph_spark.operators.dedup import (
     dot_f32,
+    minhash_lsh_pairs,
     minhash_signature,
     shingle_hashes,
     with_minhash_signature,
@@ -1022,3 +1032,58 @@ def test_substring_spans_randomized_small_alphabet(spark):
             for r in substring_dup_spans(df, w).collect()
         }
         assert got == expect, f"trial {trial}: {sorted(got) and sorted(expect)}"
+
+
+# ASCII plus every code point whose lowercase is special for an ASCII
+# match: İ (lowercases to i + U+0307), dotless ı, the combining dot
+# itself, the Kelvin and Angstrom signs, ß and ẞ, the three sigmas
+# (final-sigma context), the ﬀ ligature, a supplementary-plane capital,
+# NBSP and NUL.
+FOLD_ALPHABET = (
+    string.ascii_letters
+    + string.digits
+    + string.punctuation
+    + " \t\n\r\x0b\x0c"
+    + "\u0130\u0131\u0307\u212a\u212b\u00df\u1e9e"
+    + "\u03a3\u03c3\u03c2\ufb00\U00010400\u00a0\x00"
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(st.text(alphabet=FOLD_ALPHABET, max_size=24), max_size=12))
+def test_ascii_fold_helpers_match_icu_lower(spark, texts):
+    """tokens(), normalize_text() and punct_chars() fold case without
+    ICU; each equals the same expression built on Spark's lower()."""
+    rows = [(i, t) for i, t in enumerate(texts + ["", None])]
+    df = spark.createDataFrame(rows, "i int, text string")
+    low = F.lower("text")
+    got = df.select(
+        "i",
+        tokens(F.col("text")).alias("tok"),
+        F.regexp_extract_all(low, F.lit("[a-z0-9]+"), 0).alias("tok_x"),
+        normalize_text(F.col("text")).alias("norm"),
+        F.trim(F.regexp_replace(low, "[^a-z0-9]+", " ")).alias("norm_x"),
+        punct_chars(F.col("text")).alias("punct"),
+        F.length(F.regexp_replace(low, r"[a-z0-9\s]", "")).alias("punct_x"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert (r.tok, r.norm, r.punct) == (r.tok_x, r.norm_x, r.punct_x), rows[r.i]
+
+
+def test_text_helpers_and_minhash_plans_hold_no_case_mapping(spark, tmp_path):
+    """The tokenizer, the normalizer and a MinHash pass plan no ICU case
+    mapping: the first lower() in a JVM stalls every task of its stage
+    for about 3 s while ICU builds its tables."""
+    path = str(tmp_path / "docs")
+    rows = [(1, BASE), (2, BASE.upper()), (3, NEAR), (4, FAR)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    for df in (
+        minhash_lsh_pairs(docs),
+        docs.select(tokens(F.col("text"))),
+        docs.select(normalize_text(F.col("text"))),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for fn in ("lower(", "upper(", "initcap("):
+            assert fn not in plan, plan
