@@ -119,12 +119,11 @@ def _chunk_lines(chunks: DataFrame) -> DataFrame:
     )
 
 
-def scan_chunks(reader, path: str) -> DataFrame:
+def scan_chunks(spark: SparkSession, path: str) -> DataFrame:
     """Record-delimited text scan of a GEDCOM file or directory:
-    ``(value, file, block_start)`` per chunk. ``reader`` is
-    ``spark.read`` or ``spark.readStream``."""
+    ``(value, file, block_start)`` per chunk."""
     return (
-        reader.option("lineSep", _CHUNK_SEP)
+        spark.read.option("lineSep", _CHUNK_SEP)
         .format("text")
         .load(path)
         .select(
@@ -136,7 +135,7 @@ def scan_chunks(reader, path: str) -> DataFrame:
 
 
 def lines_from_chunks(chunks: DataFrame) -> DataFrame:
-    """The lines IR of a (batch) ``scan_chunks`` frame.
+    """The lines IR of a ``scan_chunks`` frame.
 
     A file's first chunk is the first row its offset-0 split yields. That
     is not row 0 of a scan partition when small files share one, so it is
@@ -159,7 +158,7 @@ def lines_from_chunks(chunks: DataFrame) -> DataFrame:
 
 def read_gedcom_lines(spark: SparkSession, path: str) -> DataFrame:
     """Scan a GEDCOM file (or directory of files) into the lines IR."""
-    return lines_from_chunks(scan_chunks(spark.read, path))
+    return lines_from_chunks(scan_chunks(spark, path))
 
 
 def lines_from_string(spark: SparkSession, text: str, n_partitions: int = 2) -> DataFrame:
