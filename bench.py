@@ -158,17 +158,12 @@ HEADLINE = (
     "dsir_importance_weights",
 )
 
-# r9 (r8 verdict item 6): the families that dominate sf100 risk join the
-# headline — one iterative-graph convergence member (HashMin CC with the
-# keyed edge cache) and one stateful streaming gate (session windows on
-# RocksDB, full availableNow drain). Kept OUTSIDE the r8-comparable
-# tuple so round-over-round subtotals stay apples-to-apples (the
-# artifact reports both sums).
+# A family that dominates sf100 risk joins the headline: one
+# iterative-graph convergence member (HashMin CC with the keyed edge
+# cache). Kept OUTSIDE the r8-comparable tuple so round-over-round
+# subtotals stay apples-to-apples (the artifact reports both sums).
 R8_COMPARABLE = HEADLINE
-HEADLINE = HEADLINE + (
-    "copurchase_cc_converged",
-    "stream_session_windows",
-)
+HEADLINE = HEADLINE + ("copurchase_cc_converged",)
 
 N_SYNTH_INDI = 50_000  # synthesized GEDCOM individuals for the ETL bench
 

@@ -5,7 +5,9 @@ The reference binds a dict of imperative per-value transforms
 (/root/reference/lib/csv_writer.js:34-83); each becomes a pure
 ``Column -> Column`` function here, so Catalyst folds them into
 whole-stage codegen. Dictionary-valued transforms (temple decode) take a
-literal map.
+literal map; at scale prefer the broadcast-join form in
+``operators/relational.py`` which keeps the dictionary out of the plan
+string.
 """
 
 from __future__ import annotations
@@ -36,8 +38,8 @@ def _temple_map() -> Column:
 
 def temple_decode(code: Column) -> Column:
     """TEMP code -> temple name; unknown codes pass through unchanged
-    (reference lib/csv_writer.js:57-65). Extraction reports misses as
-    its ``missing_temple_codes`` audit set.
+    (reference lib/csv_writer.js:57-65). Misses are a first-class query
+    (see operators.relational / gedcom extraction), not a side effect.
     """
     return F.coalesce(F.element_at(_temple_map(), code), code)
 
@@ -72,7 +74,7 @@ def surname(name: Column) -> Column:
     return F.when(name.contains("/") & piece.rlike(r"[^\s]"), piece)
 
 
-# --- text helpers of the MinHash operator ---------------------------------
+# --- text helpers shared by the dedup / text-analysis operators -----------
 
 # Case fold for expressions that keep only ASCII alphanumerics. Spark's
 # lower() uses ICU case mappings by default, and the first lower() a JVM
@@ -120,3 +122,16 @@ def tokens(text: Column) -> Column:
     """Alphanumeric tokens (lowercased) as array<string>."""
     return F.regexp_extract_all(ascii_fold(text), F.lit("[a-z0-9]+"), 0)
 
+
+def md5_bucket(col: Column, n_buckets: int) -> Column:
+    """First-16-bits-of-md5 bucket assignment — THE shared
+    engine-agnostic hash idiom (DuckDB mirror:
+    ``CAST(('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 4)) AS INTEGER)
+    % n``). Used by the shard writer, the upsert table, the negative
+    miner, and dataset_shard_assign; one definition so bucket
+    membership can never silently diverge between them."""
+    return (
+        F.conv(F.substring(F.md5(col.cast("string")), 1, 4), 16, 10)
+        .cast("int")
+        % n_buckets
+    ).cast("int")

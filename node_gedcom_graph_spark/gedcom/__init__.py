@@ -6,3 +6,4 @@ from node_gedcom_graph_spark.gedcom.parser import (  # noqa: F401
     lines_from_string,
     read_gedcom_lines,
 )
+from node_gedcom_graph_spark.gedcom import queries  # noqa: F401

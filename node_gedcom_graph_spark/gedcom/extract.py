@@ -81,6 +81,17 @@ class GedcomGraph:
         if self.frame is not None:
             self.frame.unpersist()
 
+    def nodes_wide(self, root_tag: str) -> DataFrame:
+        """Per-label wide table (the reference's nodes-<TAG>.csv shape):
+        one row per node, one column per flat key, null where it lacks
+        the key."""
+        sub = self.nodes.filter(F.col("root_tag") == root_tag)
+        keys = sub.select(F.explode("props.flat_key")).distinct().collect()
+        ids = ["record_seq", "record_id", "label"]
+        return sub.select(*ids, F.map_from_entries("props").alias("m")).select(
+            *ids, *[F.try_element_at("m", F.lit(k)).alias(k) for k, in sorted(keys)]
+        )
+
 
 def sql_string(s: str) -> str:
     """``s`` as a Spark SQL string literal, for building one ``F.expr``

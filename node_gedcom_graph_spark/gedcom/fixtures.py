@@ -49,3 +49,118 @@ DEMO_GEDCOM = """\
 0 TRLR
 """
 
+
+def synth_gedcom_lines(spark, n_indi: int):
+    """Generate the lines IR (line_no, level, xref, tag, value,
+    record_seq) for ``n_indi`` synthetic individuals entirely Spark-side
+    (7 lines each: INDI / NAME / SEX / BIRT{DATE,PLAC} / FAMS),
+    mirroring a ~n*250B GEDCOM file. record_seq is closed-form (one
+    record per 7 lines), so the prefix-sum assignment step is skipped —
+    this generator exists to exercise EXTRACTION at data scale (bench +
+    the gedcom_synth_extract_stats oracle gate), not parsing.
+
+    Value distributions are deterministic functions of the id, so
+    aggregate extraction statistics are hand-computable: names unique,
+    surnames id%1000, sexes 2, birth years id%100, places Springfield
+    vs a SLAKE temple code every 50th, families id%10000.
+    """
+    from pyspark.sql import functions as F
+
+    base = spark.range(n_indi).select(F.col("id"))
+    lines = base.select(
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("off"), F.lit(0).alias("level"),
+                         F.concat(F.lit("I"), F.col("id")).alias("xref"),
+                         F.lit("INDI").alias("tag"), F.lit("").alias("value")),
+                F.struct(F.lit(1).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("NAME").alias("tag"),
+                         F.concat(F.lit("Given"), F.col("id"), F.lit(" /Fam"),
+                                  (F.col("id") % 1000), F.lit("/")).alias("value")),
+                F.struct(F.lit(2).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("SEX").alias("tag"),
+                         F.when(F.col("id") % 2 == 0, "M").otherwise("F").alias("value")),
+                F.struct(F.lit(3).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("BIRT").alias("tag"), F.lit("").alias("value")),
+                F.struct(F.lit(4).alias("off"), F.lit(2).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("DATE").alias("tag"),
+                         F.concat(F.lit("1 JAN "), F.lit(1900) + F.col("id") % 100).alias("value")),
+                F.struct(F.lit(5).alias("off"), F.lit(2).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("PLAC").alias("tag"),
+                         F.when(F.col("id") % 50 == 0, "SLAKE").otherwise("Springfield").alias("value")),
+                F.struct(F.lit(6).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("FAMS").alias("tag"),
+                         F.concat(F.lit("@F"), F.col("id") % 10000, F.lit("@")).alias("value")),
+            )
+        ).alias("s"),
+        (F.col("id") * 7).alias("base_no"),
+    ).select(
+        (F.col("base_no") + F.col("s.off")).alias("line_no"),
+        F.col("s.level").alias("level"),
+        F.col("s.xref").alias("xref"),
+        F.col("s.tag").alias("tag"),
+        F.col("s.value").alias("value"),
+    )
+    return lines.withColumn("record_seq", (F.col("line_no") / 7 + 1).cast("long"))
+
+
+def synth_gedcom_fam_lines(spark, n_fam: int):
+    """Family-record twin of :func:`synth_gedcom_lines`: ``n_fam`` FAM
+    records (7 lines each: FAM / HUSB / WIFE / CHIL / MARR{DATE,TEMP})
+    with closed-form pointer and value distributions — built to gate
+    pointer HOISTING (MARR's children anchor to the FAM root) and the
+    TEMP decode + miss-tracking audit at data scale: husbands I{2f},
+    wives I{2f+1}, children I{(2f+77) % 2n}, marriage years f%80, TEMP
+    codes SLAKE every 10th family (decodes) else XX{f%7} (7 unknown
+    codes -> the missing-temple audit set).
+    """
+    from pyspark.sql import functions as F
+
+    base = spark.range(n_fam).select(F.col("id"))
+    lines = base.select(
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("off"), F.lit(0).alias("level"),
+                         F.concat(F.lit("F"), F.col("id")).alias("xref"),
+                         F.lit("FAM").alias("tag"), F.lit("").alias("value")),
+                F.struct(F.lit(1).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("HUSB").alias("tag"),
+                         F.concat(F.lit("@I"), F.col("id") * 2, F.lit("@")).alias("value")),
+                F.struct(F.lit(2).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("WIFE").alias("tag"),
+                         F.concat(F.lit("@I"), F.col("id") * 2 + 1, F.lit("@")).alias("value")),
+                F.struct(F.lit(3).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("CHIL").alias("tag"),
+                         F.concat(F.lit("@I"), (F.col("id") * 2 + 77) % (2 * n_fam), F.lit("@")).alias("value")),
+                F.struct(F.lit(4).alias("off"), F.lit(1).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("MARR").alias("tag"), F.lit("").alias("value")),
+                F.struct(F.lit(5).alias("off"), F.lit(2).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("DATE").alias("tag"),
+                         F.concat(F.lit("3 MAR "), F.lit(1920) + F.col("id") % 80).alias("value")),
+                F.struct(F.lit(6).alias("off"), F.lit(2).alias("level"),
+                         F.lit(None).cast("string").alias("xref"),
+                         F.lit("TEMP").alias("tag"),
+                         F.when(F.col("id") % 10 == 0, F.lit("SLAKE"))
+                          .otherwise(F.concat(F.lit("XX"), F.col("id") % 7)).alias("value")),
+            )
+        ).alias("s"),
+        (F.col("id") * 7).alias("base_no"),
+    ).select(
+        (F.col("base_no") + F.col("s.off")).alias("line_no"),
+        F.col("s.level").alias("level"),
+        F.col("s.xref").alias("xref"),
+        F.col("s.tag").alias("tag"),
+        F.col("s.value").alias("value"),
+    )
+    return lines.withColumn("record_seq", (F.col("line_no") / 7 + 1).cast("long"))

@@ -6,3 +6,4 @@ from node_gedcom_graph_spark.graph.queries import (  # noqa: F401
     siblings,
     spouses,
 )
+from node_gedcom_graph_spark.graph import gedcom_graph_queries  # noqa: F401

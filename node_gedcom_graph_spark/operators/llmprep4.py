@@ -1494,10 +1494,10 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LEFT join + coalesce: a non-empty document with zero alphanumeric
     # tokens (punctuation-only) produces no explode rows, so an inner
     # join would drop it from the funnel entirely while the oracle's
-    # len(toks)=0 and the streaming twin's F.size(toks)=0 keep it as a
-    # candidate that fails pass_quality. n_tokens coalesces to 0;
-    # logit_sum stays NULL (the oracle's SUM over an empty unnest),
-    # making pass_classifier NULL/0 -> NULL on both sides.
+    # len(toks)=0 keeps it as a candidate that fails pass_quality.
+    # n_tokens coalesces to 0; logit_sum stays NULL (the oracle's SUM
+    # over an empty unnest), making pass_classifier NULL/0 -> NULL on
+    # both sides.
     st = cand.select("doc_id", "source", "text", punct.alias("punct_ratio")).join(
         tokstats, "doc_id", "left"
     )

@@ -714,9 +714,9 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_time_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window (epoch-aligned hourly buckets). Same
-    `F.window` expression works under readStream + withWatermark — see
-    streaming/pipeline.py for the streaming variant."""
+    """Tumbling event-time window (epoch-aligned hourly buckets). The
+    same `F.window` expression also works under readStream +
+    withWatermark."""
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 hour"), "event_type")

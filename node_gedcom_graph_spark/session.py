@@ -1,8 +1,8 @@
 """SparkSession factory with engine defaults.
 
-Defaults are chosen for deterministic results (UTC session timezone)
-and for scale (AQE on, skew-join handling, Arrow transfers for the
-pandas kernel of ``topk_cosine``).
+Defaults are chosen for correctness-vs-DuckDB comparison (UTC session
+timezone, NTZ parquet inference) and for scale (AQE on, skew-join
+handling, Arrow transfers for the pandas-UDF slow path).
 """
 
 from __future__ import annotations
@@ -26,12 +26,20 @@ from pyspark.sql import SparkSession
 ENGINE_CONFS: dict[str, str] = {
     # Deterministic timestamp semantics; DuckDB timestamps are UTC-naive.
     "spark.sql.session.timeZone": "UTC",
+    # The events table carries TIMESTAMP(NANOS) which vanilla Spark
+    # refuses to read; read as raw nanos and convert (sources/tables.py).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Runtime re-planning: partition coalescing + skew-join splitting.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for pandas-UDF / toPandas transfers.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Arrow-batched UDTF evaluation: without it Python UDTFs fall back
+    # to row-at-a-time pickle transfer (BatchEvalPythonUDTF); with it
+    # the plan shows ArrowEvalPythonUDTF (same semantics, columnar
+    # transfer) — the only Python-UDTF surface is sentence splitting.
+    "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
     # InferFiltersFromGenerate adds size(e)>0/isnotnull(e) under every
     # explode; predicate pushdown then inlines the generator's whole
     # child expression into a pre-codegen Filter at the scan. For
@@ -292,7 +300,7 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) so the same entry points serve tests, the CLI, perfbench and a real
+    ``local[*]``) so the same entry points serve tests, bench, and a real
     cluster (where ``master`` is supplied by spark-submit and this arg is
     left None with an existing session).
 
@@ -351,3 +359,14 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
+
+def apply_engine_confs(spark: SparkSession) -> SparkSession:
+    """Set the engine's dynamic confs on an externally-created session.
+
+    The driver harness hands us its own SparkSession; every conf in
+    ENGINE_CONFS is dynamic (SQL-layer), so applying them here is enough
+    for correct reads of the test tables.
+    """
+    for k, v in ENGINE_CONFS.items():
+        spark.conf.set(k, v)
+    return spark

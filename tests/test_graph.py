@@ -191,3 +191,146 @@ def test_traversals_free_their_blocks(spark, edges, monkeypatch):
         connected_components(edges)
     assert _storage_entries(spark) <= before
 
+
+def _synth_lineitem(tmp_path, pairs):
+    """Write a minimal lineitem.parquet whose co-purchase graph (weight
+    >= 2 canonical edges) is exactly `pairs` — each pair appears in two
+    distinct orders."""
+    import pandas as pd
+
+    rows = []
+    order = 0
+    for a, b in pairs:
+        for _ in range(2):  # weight-2 threshold
+            rows.append((order, a))
+            rows.append((order, b))
+            order += 1
+    pd.DataFrame(rows, columns=["l_orderkey", "l_partkey"]).to_parquet(
+        tmp_path / "lineitem.parquet"
+    )
+    return str(tmp_path)
+
+
+def test_label_propagation_min_tiebreak_converges(spark, tmp_path):
+    """Hand-computed 3-iteration LPA on a triangle + pendant:
+    edges 1-2, 2-3, 1-3, 3-4. Iteration 1 exercises the min-label
+    tie-break (node 1 sees {2,3} one vote each -> takes 2); by
+    iteration 3 every node has converged to community 1."""
+    from node_gedcom_graph_spark.operators.graphalgo import (
+        copurchase_label_propagation_3iter,
+    )
+
+    sf_dir = _synth_lineitem(tmp_path, [(1, 2), (2, 3), (1, 3), (3, 4)])
+    got = {
+        r.p_partkey: r.community
+        for r in copurchase_label_propagation_3iter(spark, sf_dir).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_bfs_2hop_min_distance(spark, tmp_path):
+    """Path 500-1-2-3 seeded at 500 (the mod-500 seed rule): node 1 at
+    distance 1, node 2 at distance 2, node 3 unreached within 2 hops,
+    and the seed itself excluded."""
+    from node_gedcom_graph_spark.operators.graphalgo import copurchase_bfs_2hop
+
+    sf_dir = _synth_lineitem(tmp_path, [(500, 1), (1, 2), (2, 3)])
+    got = {
+        (r.seed, r.node): r.dist
+        for r in copurchase_bfs_2hop(spark, sf_dir).collect()
+    }
+    assert got == {(500, 1): 1, (500, 2): 2}
+
+
+def _copurchase_edge_set():
+    """Pure-Python co-purchase edges (pa<pb, weight>=2) from parquet."""
+    from collections import Counter
+    from itertools import combinations
+
+    import pandas as pd
+
+    li = pd.read_parquet("/root/testdata/sf0.001/lineitem.parquet")
+    per_order = li.groupby("l_orderkey")["l_partkey"].apply(
+        lambda s: sorted(set(s))
+    )
+    pair_w = Counter()
+    for parts in per_order:
+        for a, b in combinations(parts, 2):
+            pair_w[(a, b)] += 1
+    return {p for p, w in pair_w.items() if w >= 2}
+
+
+def test_degree_powerlaw_matches_pure_python(spark):
+    import math
+    from collections import Counter
+
+    from node_gedcom_graph_spark.operators.graphalgo import (
+        copurchase_degree_powerlaw,
+    )
+
+    row = copurchase_degree_powerlaw(spark, "/root/testdata/sf0.001").collect()[0]
+    edges = _copurchase_edge_set()
+    deg = Counter()
+    for a, b in edges:
+        deg[a] += 1
+        deg[b] += 1
+    n = len(deg)
+    assert row["n_nodes"] == n
+    assert row["n_edges"] == len(edges)
+    assert abs(row["mean_degree"] - sum(deg.values()) / n) < 1e-6
+    assert row["max_degree"] == max(deg.values())
+    alpha = 1.0 + n / sum(math.log(d / 0.5) for d in deg.values())
+    assert abs(row["alpha_mle"] - alpha) < 1e-6
+
+
+def test_assortativity_matches_numpy(spark):
+    from collections import Counter
+
+    import numpy as np
+
+    from node_gedcom_graph_spark.operators.graphalgo import (
+        copurchase_assortativity,
+    )
+
+    row = copurchase_assortativity(spark, "/root/testdata/sf0.001").collect()[0]
+    edges = _copurchase_edge_set()
+    deg = Counter()
+    for a, b in edges:
+        deg[a] += 1
+        deg[b] += 1
+    xs, ys = [], []
+    for a, b in edges:
+        xs += [deg[a], deg[b]]
+        ys += [deg[b], deg[a]]
+    assert row["n_edges"] == len(edges)
+    assert abs(row["assortativity"] - np.corrcoef(xs, ys)[0, 1]) < 1e-6
+
+
+def test_global_clustering_matches_pure_python(spark):
+    from collections import Counter, defaultdict
+
+    from node_gedcom_graph_spark.operators.graphalgo import (
+        copurchase_clustering_global,
+    )
+
+    row = copurchase_clustering_global(
+        spark, "/root/testdata/sf0.001"
+    ).collect()[0]
+    edges = _copurchase_edge_set()
+    adj = defaultdict(set)
+    deg = Counter()
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+        deg[a] += 1
+        deg[b] += 1
+    tri = 0
+    for a, b in edges:
+        if a < b:
+            tri += len(adj[a] & adj[b] - {a, b})
+    tri //= 3
+    wedges = sum(d * (d - 1) // 2 for d in deg.values())
+    assert row["n_triangles"] == tri
+    assert row["n_wedges"] == wedges
+    if wedges:
+        assert abs(row["global_clustering"] - 3 * tri / wedges) < 1e-6

@@ -1,179 +1,36 @@
-"""The traversal kernels checked against DuckDB oracles: same columns,
-same rows in any order (floats rounded to 6 dp), and at least one row.
-
-Each check builds its edge frame from the sf0.01 parquet (the part
-co-purchase graph of ``lineitem``, or the near-duplicate pairs of
-``documents``) or from ``DEMO_GEDCOM``, and calls ``graph.queries`` or
-``graph.traverse`` directly. DuckDB computes the same answer with a
-recursive CTE over the same data.
-"""
+"""Registry queries that run on the traversal kernels, checked against
+their DuckDB oracles at sf0.01: same columns, same rows in any order
+(floats rounded to 6 dp), and at least the declared vacuity floor."""
 
 from __future__ import annotations
 
-import math
-import re
+import os
 from collections import Counter
 
 import duckdb
 import pytest
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
 
-from node_gedcom_graph_spark.gedcom.extract import extract_graph
-from node_gedcom_graph_spark.gedcom.fixtures import DEMO_GEDCOM
-from node_gedcom_graph_spark.gedcom.parser import lines_from_string
-from node_gedcom_graph_spark.graph.queries import (
-    ancestors,
-    connected_components,
-    descendants,
-)
-from node_gedcom_graph_spark.graph.traverse import reach
+import __spark_entry__ as ent
 from tests.conftest import SF_DIR as SF0001_DIR
+from tools.verify_local import TABLES, _norm_cell
 
-SF_DIR = SF0001_DIR.replace("sf0.001", "sf0.01")
+SF_DIR = os.path.join(os.path.dirname(SF0001_DIR), "sf0.01")
 
-# Bound on BFS rounds, and the depth of the oracles' recursive walks.
-BFS_ROUNDS = 20
-HARMONIC_N_SEEDS = 8
-# Shingle Jaccard at which two documents join a duplicate cluster.
-CLUSTER_JACCARD = 0.2
-
-# Canonical (pa < pb) co-purchase edges: two parts bought together in at
-# least two orders.
-EDGES_SQL = """
-    op AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    edges AS MATERIALIZED (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM op a
-      JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
-    )
-"""
-
-ORACLES = {
-    "copurchase_cc_converged": f"""
-    WITH RECURSIVE {EDGES_SQL},
-    sym AS MATERIALIZED (
-      SELECT pa AS a, pb AS b FROM edges
-      UNION ALL SELECT pb, pa FROM edges
-    ),
-    walk(node, comp) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.node
-    )
-    SELECT CAST(node AS BIGINT) AS part_key,
-           CAST(MIN(comp) AS BIGINT) AS component
-    FROM walk GROUP BY node
-    """,
-    "copurchase_bfs_converged": f"""
-    WITH RECURSIVE {EDGES_SQL.strip()},
-    und AS MATERIALIZED (
-      SELECT pa AS s, pb AS d FROM edges
-      UNION ALL
-      SELECT pb, pa FROM edges
-    ), seed AS (
-      SELECT MIN(pa) AS m FROM edges
-    ), walk(node, dist) AS (
-      SELECT m, 0 FROM seed
-      UNION
-      SELECT u.d, w.dist + 1
-      FROM walk w JOIN und u ON u.s = w.node
-      WHERE w.dist < {BFS_ROUNDS}
-    )
-    SELECT node, CAST(MIN(dist) AS INT) AS dist
-    FROM walk GROUP BY node
-    """,
-    "copurchase_harmonic_centrality_seeds": f"""
-    WITH RECURSIVE {EDGES_SQL.strip()},
-    und AS MATERIALIZED (
-      SELECT pa AS s, pb AS d FROM edges
-      UNION ALL
-      SELECT pb, pa FROM edges
-    ),
-    nodes AS (SELECT DISTINCT s AS n FROM und),
-    seeds AS (SELECT n FROM nodes ORDER BY n LIMIT {HARMONIC_N_SEEDS}),
-    walk(seed, node, dist) AS (
-      SELECT n, n, 0 FROM seeds
-      UNION
-      SELECT w.seed, u.d, w.dist + 1
-      FROM walk w JOIN und u ON u.s = w.node
-      WHERE w.dist < {BFS_ROUNDS}
-    ),
-    best AS (
-      SELECT seed, node, MIN(dist) AS dist
-      FROM walk GROUP BY seed, node
-    )
-    SELECT CAST(node AS BIGINT) AS part_key,
-           CAST(COUNT(*) AS BIGINT) AS n_seeds_reaching,
-           CAST(SUM(CAST(CAST(1 AS DOUBLE) / dist AS DECIMAL(28,14)))
-                AS DOUBLE) AS harmonic
-    FROM best
-    WHERE dist > 0
-    GROUP BY node
-    """,
-    "gedcom_graph_components": """
-    SELECT * FROM (VALUES
-      ('F1', 'F1'), ('I1', 'F1'), ('I2', 'F1'), ('I3', 'F1'), ('S1', 'F1')
-    ) t(id, component)
-    """,
-    "gedcom_graph_ancestors": """
-    SELECT * FROM (VALUES
-      ('I3', 'I1', 1),
-      ('I3', 'I2', 1)
-    ) t(person, ancestor, depth)
-    """,
-    "gedcom_graph_descendants": """
-    SELECT * FROM (VALUES
-      ('I1', 'I3', 1),
-      ('I2', 'I3', 1)
-    ) t(person, descendant, depth)
-    """,
-    "dedup_cluster_canonical": f"""
-    WITH RECURSIVE toks AS MATERIALIZED (
-      SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-      FROM documents
-    ), sh AS MATERIALIZED (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(range(len(w) - 2),
-               i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]))) AS shingle
-      FROM toks
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT i.doc_a, i.doc_b
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.doc_a
-      JOIN sizes sb ON sb.doc_id = i.doc_b
-      WHERE CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) >= {CLUSTER_JACCARD}
-    ), edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION
-      SELECT doc_b, doc_a FROM pairs
-    ), reach AS (
-      SELECT DISTINCT a AS id, a AS r FROM edges
-      UNION
-      SELECT e.a, reach.r FROM edges e JOIN reach ON reach.id = e.b
-    )
-    SELECT doc_id, canonical_id, cluster_size,
-           doc_id = canonical_id AS is_kept
-    FROM (
-      SELECT id AS doc_id, MIN(r) AS canonical_id, COUNT(*) AS cluster_size
-      FROM reach GROUP BY id
-    )
-    """,
-}
+QUERIES = (
+    "copurchase_cc_converged",
+    "copurchase_bfs_converged",
+    "copurchase_harmonic_centrality_seeds",
+    "gedcom_graph_components",
+    "gedcom_graph_ancestors",
+    "gedcom_graph_descendants",
+    "dedup_cluster_canonical",
+)
 
 
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in ("lineitem", "documents"):
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
@@ -181,159 +38,17 @@ def duck():
     con.close()
 
 
-@pytest.fixture(scope="module")
-def copurchase(spark):
-    """The co-purchase edges ``(pa, pb)``, as ``EDGES_SQL`` defines them."""
-    op = (
-        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb"))
-        .count()
-        .filter(F.col("count") >= 2)
-        .select("pa", "pb")
-        .cache()
-    )
-    yield edges
-    edges.unpersist()
-
-
-@pytest.fixture(scope="module")
-def demo_edges(spark):
-    lines = lines_from_string(spark, DEMO_GEDCOM, n_partitions=3)
-    return extract_graph(lines).edges.localCheckpoint(eager=True)
-
-
-def _both_ways(edges):
-    """``(src, dst)`` in both directions of each ``(pa, pb)`` edge."""
-    return edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-
-
-def copurchase_cc_converged(spark, copurchase):
-    comp = connected_components(
-        copurchase.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
-    return comp.select(
-        F.col("id").cast("bigint").alias("part_key"),
-        F.col("component").cast("bigint").alias("component"),
-    )
-
-
-def copurchase_bfs_converged(spark, copurchase):
-    """BFS to its fixpoint from the smallest part."""
-    seed = copurchase.agg(F.min("pa")).first()[0]
-    first = spark.createDataFrame([(int(seed), 0)], "node long, depth int")
-    return reach(
-        first, _both_ways(copurchase), ("node",), BFS_ROUNDS, strict=True
-    ).withColumnRenamed("depth", "dist")
-
-
-def copurchase_harmonic_centrality_seeds(spark, copurchase):
-    """One multi-source BFS from the smallest parts; per reached node, the
-    number of seeds reaching it and the sum of 1/distance."""
-    sym = _both_ways(copurchase)
-    seeds = [
-        r.src
-        for r in sym.select("src").distinct().orderBy("src").limit(HARMONIC_N_SEEDS).collect()
-    ]
-    first = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in seeds], "seed long, node long, depth int"
-    )
-    dist = reach(first, sym, ("seed", "node"), BFS_ROUNDS, strict=True)
-    return (
-        dist.filter(F.col("depth") > 0)
-        .groupBy(F.col("node").cast("bigint").alias("part_key"))
-        .agg(
-            F.count(F.lit(1)).alias("n_seeds_reaching"),
-            F.sum((F.lit(1.0) / F.col("depth")).cast("decimal(28,14)"))
-            .cast("double")
-            .alias("harmonic"),
-        )
-    )
-
-
-def gedcom_graph_components(spark, demo_edges):
-    return connected_components(demo_edges)
-
-
-def gedcom_graph_ancestors(spark, demo_edges):
-    return ancestors(demo_edges, max_depth=5)
-
-
-def gedcom_graph_descendants(spark, demo_edges):
-    return descendants(demo_edges, max_depth=5)
-
-
-def _shingles(text):
-    toks = re.findall("[a-z0-9]+", text.lower())
-    return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-
-def dedup_cluster_canonical(spark):
-    """Connected components of the exact-Jaccard pair graph; each
-    document labelled with its cluster's minimum doc_id."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    shingles = {r.doc_id: _shingles(r.text or "") for r in docs.collect()}
-    ids = sorted(d for d, sh in shingles.items() if sh)
-    pairs = [
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if len(shingles[a] & shingles[b]) / len(shingles[a] | shingles[b])
-        >= CLUSTER_JACCARD
-    ]
-    comp = connected_components(spark.createDataFrame(pairs, "src long, dst long"))
-    return comp.select(
-        F.col("id").alias("doc_id"),
-        F.col("component").alias("canonical_id"),
-        F.count(F.lit(1)).over(W.partitionBy("component")).alias("cluster_size"),
-        (F.col("id") == F.col("component")).alias("is_kept"),
-    )
-
-
-CHECKS = {
-    "copurchase_cc_converged": (copurchase_cc_converged, "copurchase"),
-    "copurchase_bfs_converged": (copurchase_bfs_converged, "copurchase"),
-    "copurchase_harmonic_centrality_seeds": (copurchase_harmonic_centrality_seeds, "copurchase"),
-    "gedcom_graph_components": (gedcom_graph_components, "demo_edges"),
-    "gedcom_graph_ancestors": (gedcom_graph_ancestors, "demo_edges"),
-    "gedcom_graph_descendants": (gedcom_graph_descendants, "demo_edges"),
-    "dedup_cluster_canonical": (dedup_cluster_canonical, None),
-}
-
-
-def _norm(v):
-    """One cell as text: floats to 6 dp, so the engines' last-bit
-    differences do not count."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{round(v, 6):.6f}"
-    return str(v)
-
-
 def _rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter(tuple(_norm(r[i]) for i in order) for r in rows)
+    return Counter(tuple(_norm_cell(r[i]) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("name", list(CHECKS))
-def test_matches_oracle(spark, duck, request, name):
-    build, edges = CHECKS[name]
-    sdf = build(spark, request.getfixturevalue(edges)) if edges else build(spark)
+@pytest.mark.parametrize("name", QUERIES)
+def test_matches_oracle(spark, duck, name):
+    sdf = ent.queries()[name](spark, SF_DIR)
     got = [tuple(r) for r in sdf.collect()]
-    assert got
-    res = duck.execute(ORACLES[name])
+    assert len(got) >= ent.expected_rows()[name]
+    res = duck.execute(ent.oracle_sql()[name])
     ocols = [d[0] for d in res.description]
     assert sorted(sdf.columns) == sorted(ocols)
     assert _rows(sdf.columns, got) == _rows(ocols, res.fetchall())

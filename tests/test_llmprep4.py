@@ -310,35 +310,6 @@ def test_curation_funnel_monotone_and_consistent(spark):
     assert sum(r.n_pass_decontam for r in rows) == expect_decontam
 
 
-def test_stream_curation_funnel_equals_batch(spark):
-    from node_gedcom_graph_spark.operators.llmprep4 import (
-        curation_funnel_report,
-    )
-    from node_gedcom_graph_spark.streaming.pipeline import (
-        stream_curation_funnel,
-    )
-
-    batch = {tuple(r) for r in curation_funnel_report(spark, SF_DIR).collect()}
-    stream = {tuple(r) for r in stream_curation_funnel(spark, SF_DIR).collect()}
-    assert stream == batch and batch
-
-
-def test_stream_incremental_equals_batch(spark):
-    from node_gedcom_graph_spark.streaming.pipeline import (
-        stream_dedup_incremental,
-    )
-
-    batch = {
-        r.doc_id: (r.source, r.is_dup, r.match_old_id)
-        for r in dedup_incremental_snapshot(spark, SF_DIR).collect()
-    }
-    stream = {
-        r.doc_id: (r.source, r.is_dup, r.match_old_id)
-        for r in stream_dedup_incremental(spark, SF_DIR).collect()
-    }
-    assert stream == batch and batch
-
-
 def _bucket(tok: str) -> int:
     return int(hashlib.md5(tok.encode()).hexdigest()[:4], 16) % QCLS_BUCKETS
 

@@ -207,10 +207,12 @@ def test_export_caches_nothing_of_its_own(spark, tmp_path, monkeypatch):
     assert calls == []
 
 
-def test_write_plan_holds_only_the_record_aggregate(spark, tmp_path, monkeypatch):
-    """The CSV write reads each record's row as extraction left it: the
-    only aggregate in its plan is extraction's per-record collect_list
-    of its lines."""
+def test_write_and_wide_plans_hold_only_the_record_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """The CSV write and the wide table read each record's row as
+    extraction left it: the only aggregate in their plans is
+    extraction's per-record collect_list of its lines."""
     from pyspark.sql import DataFrameWriter
 
     g = _graph(spark, TRICKY_GEDCOM)
@@ -223,9 +225,11 @@ def test_write_plan_holds_only_the_record_aggregate(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(DataFrameWriter, "text", spy)
     export_neo4j_csvs(g, str(tmp_path / "stage"))
-    [plan] = plans
-    aggregates = [ln for ln in plan.splitlines() if "Aggregate" in ln]
-    assert aggregates, plan
-    for ln in aggregates:
-        assert "collect_list(l#" in ln, ln
-    assert "first(" not in plan
+    plans.append(g.nodes_wide("INDI")._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) == 2
+    for plan in plans:
+        aggregates = [ln for ln in plan.splitlines() if "Aggregate" in ln]
+        assert aggregates, plan
+        for ln in aggregates:
+            assert "collect_list(l#" in ln, ln
+        assert "first(" not in plan

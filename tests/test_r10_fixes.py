@@ -308,44 +308,6 @@ def test_winsorized_cuts_equal_naive_window(spark):
     assert got == want and len(got) == 3
 
 
-def test_arrival_fixture_file_groups_preserve_batches(spark):
-    """The multi-file arrival fixtures (r10: parallel slice writes
-    instead of coalesce(1)) must keep micro-batch composition: every
-    slice has exactly files_per_batch files, file mtimes are strictly
-    increasing in slice-major name order, so a FileStreamSource with
-    maxFilesPerTrigger=files_per_batch replays slice i as batch i."""
-    import glob
-
-    from node_gedcom_graph_spark.streaming.pipeline import (
-        DEDUPWM_RANKS,
-        _write_dedupwm_fixture,
-    )
-
-    data_dir, per_batch = _write_dedupwm_fixture(spark, SF_DIR)
-    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-    assert per_batch >= 1
-    assert len(files) == DEDUPWM_RANKS * per_batch
-    # mtimes: distinct (total replay order) and slice-major
-    mtimes = [os.stat(f).st_mtime for f in files]
-    assert len(set(mtimes)) == len(mtimes)
-    assert mtimes == sorted(mtimes)
-    # each rank's file group holds exactly the rank's rows: one row per
-    # (user_id, event_type) key, keys of rank k+1 a subset of rank k
-    prev_keys = None
-    for k in range(1, DEDUPWM_RANKS + 1):
-        group = sorted(glob.glob(os.path.join(data_dir, f"f{k}_*.parquet")))
-        assert len(group) == per_batch
-        df = spark.read.parquet(*group)
-        keys = {
-            (r["user_id"], r["event_type"])
-            for r in df.select("user_id", "event_type").collect()
-        }
-        assert df.count() == len(keys)  # one row per key per batch
-        if prev_keys is not None:
-            assert keys <= prev_keys
-        prev_keys = keys
-
-
 def test_waiting_suppliers_counts_equal_semi_anti(spark):
     """r10 rewrite pin: the per-order count formulation (n_supp >= 2,
     n_late == 1) equals the correlated EXISTS/NOT EXISTS semi+anti

@@ -2,13 +2,9 @@
 
 1. curation_funnel_report keeps punctuation-only documents (zero
    alphanumeric tokens) as candidates — the tokstats join is LEFT, so
-   the Spark side matches the oracle's len(toks)=0 rows and the
-   streaming twin's F.size(toks)=0.
+   the Spark side matches the oracle's len(toks)=0 rows.
 2. decontaminate_ngram_bloom caps the benchmark set BEFORE the driver
    collect: a set over BLOOM_MAX_ITEMS must never reach toPandas().
-3. stream_curation_funnel size-gates its broadcast collect the same
-   way and falls back to a stream-static shingle join with identical
-   results.
 """
 
 from __future__ import annotations
@@ -105,19 +101,6 @@ def test_bloom_over_cap_never_reaches_driver(spark, monkeypatch):
     assert capped == baseline
 
 
-def test_stream_funnel_over_cap_matches_batch(spark, monkeypatch):
-    from node_gedcom_graph_spark.streaming.pipeline import stream_curation_funnel
-
-    batch = {
-        tuple(r) for r in curation_funnel_report(spark, SF_DIR).collect()
-    }
-    monkeypatch.setattr(llmprep4, "BLOOM_MAX_ITEMS", 1)
-    streamed = {
-        tuple(r) for r in stream_curation_funnel(spark, SF_DIR).collect()
-    }
-    assert streamed == batch
-
-
 def test_gate_artifacts_self_consistent():
     """Every committed gate artifact's summary equals its row census
     (r7's shipped 279/289 against 282/292 rows — a partial-run merge
@@ -143,30 +126,3 @@ def test_gate_artifacts_self_consistent():
         if (errs := lint_artifact(json.load(open(p))))
     }
     assert stale == {}
-
-
-def test_substring_stream_state_bound(spark):
-    """The streaming ExactSubstr op's documented state bound, measured:
-    exactly one state row per DISTINCT W-char window, and per-row store
-    cost under 400 B (16 B key + 24 B value + HDFS-backed-store
-    overhead; 255 B/row observed). This is the committed evidence for
-    the sweep artifact's structural note."""
-    from node_gedcom_graph_spark.operators.dedup import SUBSTR_W
-    from node_gedcom_graph_spark.streaming.pipeline import (
-        stream_dedup_substring_windows,
-    )
-
-    stream_dedup_substring_windows(spark, SF_DIR).count()
-    m = stream_dedup_substring_windows.last_state_metrics
-    con = duckdb.connect()
-    distinct_windows = con.execute(
-        f"""
-        SELECT COUNT(DISTINCT md5(substr(text, CAST(u.p AS INT), {SUBSTR_W})))
-        FROM (SELECT text FROM read_parquet('{SF_DIR}/documents.parquet')
-              WHERE length(text) >= {SUBSTR_W}) d
-        CROSS JOIN LATERAL (
-          SELECT unnest(range(1, length(d.text) - {SUBSTR_W} + 2)) AS p) u
-        """
-    ).fetchone()[0]
-    assert m["state_rows"] == distinct_windows
-    assert m["state_bytes"] / m["state_rows"] < 400

@@ -272,16 +272,6 @@ PATTERNS = (
 )
 
 
-# Queries whose callable RUNS a streaming job and returns its memory
-# sink: the "plan" of the returned DataFrame is just a sink-table scan,
-# so auditing it is vacuous — and executing the stream per audit run is
-# wasted work. Their streaming plans are covered by the batch twins
-# (same logical aggregation) and the streaming tests.
-SKIP_STREAMING_SINK_QUERIES = frozenset(
-    {"stream_event_time_tumbling_hourly", "stream_dedup_exact_groups"}
-)
-
-
 def audit(
     sf_dir: str = DEFAULT_SF_DIR, only: set[str] | None = None
 ) -> dict[str, list[str]]:
@@ -297,8 +287,6 @@ def audit(
     )
     failures: dict[str, list[str]] = {}
     for name, fn in sorted(all_queries().items()):
-        if name in SKIP_STREAMING_SINK_QUERIES:
-            continue
         if only and name not in only:
             continue
         try:

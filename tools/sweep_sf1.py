@@ -13,7 +13,7 @@ Usage:
   python tools/sweep_sf1.py [sf1_dir] [out.json] [name ...]
 Default names: every registered query NOT present in a prior sweep
 times file (/tmp/sweep_sf1_times.json) — i.e. the never-swept tail.
-GEDCOM/streaming-fixture queries that synthesize their own input are
+GEDCOM-fixture queries that synthesize their own input are
 skipped only if they error on the sf1 dir (recorded as skip, not fail).
 """
 
